@@ -251,20 +251,26 @@ def main() -> None:
     codec_rows_per_sec = round(n_codec_rows / codec_best)
 
     # Filter-before-decode pushdown (r15 VERDICT #1): envelope decode
-    # of the multi-table byte log with foreign-table row images
-    # skipped INSIDE the codec, vs decoded-then-filtered.  Full sweep
-    # incl. x10 and the headers-only bound: tools/pushdown_bench.py.
+    # of the multi-table byte log through format("mysql_binlog") with
+    # foreign-table row images skipped INSIDE the codec
+    # (option only_tables), vs decoded-then-filtered by a filter the
+    # DataSource cannot push (an OR).
     from mysql_cdc_spark.queries._shared import _FIXTURE_VERSION, _STREAM_TMP
     from mysql_cdc_spark.sources import binlog_source as bs
+    from mysql_cdc_spark.sources.binlog_datasource import (
+        register_binlog_source,
+    )
 
     bl_dir = Path(_STREAM_TMP) / f"binlog_{Path(sf_dir).name}_v{_FIXTURE_VERSION}"
     if not any(bl_dir.glob("binlog.*")):
         bs.generate_binlog_from_events(sf_dir, str(bl_dir))
+    register_binlog_source(spark)
 
     def _env_run(only_tables=None, post_filter=False) -> float:
-        env = bs.read_binlog_envelope(
-            spark, str(bl_dir), only_tables=only_tables
-        )
+        r = spark.read.format("mysql_binlog")
+        if only_tables:
+            r = r.option("only_tables", only_tables)
+        env = r.load(str(bl_dir))
         if post_filter:
             env = env.filter(
                 "op NOT IN ('write_rows','update_rows','delete_rows') "
@@ -281,7 +287,7 @@ def main() -> None:
     pd_filter = pd_push = float("inf")
     for i in range(3):
         f = _env_run(post_filter=True)
-        p = _env_run(only_tables={("foo", "auto")})
+        p = _env_run(only_tables="foo.auto")
         if i:
             pd_filter = round(min(pd_filter, f), 4)
             pd_push = round(min(pd_push, p), 4)
@@ -291,17 +297,10 @@ def main() -> None:
         "speedup": round(pd_filter / pd_push, 2),
     }
 
-    # The mysql_binlog Python DataSource (r16): the same byte log
-    # through format("mysql_binlog") — arrow RecordBatch ingest, one
-    # input partition per file.  Tracked next to the mapInPandas
-    # envelope wall so a protocol-layer regression is visible in the
-    # bench line (full sweep incl. Catalyst pushdown and the streaming
-    # drain: tools/ds_bench.py).
-    from mysql_cdc_spark.sources.binlog_datasource import (
-        register_binlog_source,
-    )
-
-    register_binlog_source(spark)
+    # The full envelope scan through format("mysql_binlog"): arrow
+    # RecordBatch ingest, whole files per input partition (full sweep
+    # incl. Catalyst pushdown and the streaming drain:
+    # tools/ds_bench.py).
     ds_best = float("inf")
     for i in range(3):  # 1 warm + best-of-2
         df = spark.read.format("mysql_binlog").load(str(bl_dir))

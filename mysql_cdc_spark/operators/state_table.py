@@ -899,11 +899,15 @@ class StateTable:
         return True
 
     def _gc(self, spark: SparkSession, keep: int) -> None:
-        """Drop every version below the committed one, and EVERY
-        leftover _delta temp — a temp dir is only alive inside a
-        merge_batch call (single writer), so any temp visible here is
-        a crash orphan.  Heals lingering v{N} dirs whose pointer swap
-        never happened too: the next merge re-collects them."""
+        """Drop every version below the one before the committed
+        ``keep``, and EVERY leftover _delta temp — a temp dir is only
+        alive inside a merge_batch call (single writer), so any temp
+        visible here is a crash orphan.  v{keep-1} survives one more
+        commit: a reader that resolved the pointer just before this
+        swap may still be scanning it (deleting it under the reader
+        failed its scan with FILE_NOT_EXIST).  Heals lingering v{N}
+        dirs whose pointer swap never happened too: the next merge
+        re-collects them."""
         for entry in os.listdir(self.root):
             if not entry.startswith("v"):
                 continue
@@ -912,7 +916,7 @@ class StateTable:
             if not stem[1:].isdigit():
                 continue
             ver = int(stem[1:])
-            if not is_tmp and ver >= keep:
+            if not is_tmp and ver >= keep - 1:
                 continue
             suffix = "_delta" if is_tmp else ""
             spark.sql(f"DROP TABLE IF EXISTS {self._vtable(ver)}{suffix}")

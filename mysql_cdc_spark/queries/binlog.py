@@ -13,11 +13,12 @@ from mysql_cdc_spark.queries._shared import (  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
-# Binlog byte codec end-to-end (sources/binlog_codec.py + binlog_source
-# .py): events → REAL binlog bytes (driver-side encode) → binaryFile +
-# mapInPandas decode on executors → envelope, hash-checked against the
-# same derivation done in SQL.  This exercises D1-D12 (headers,
-# table-map, row bitfields/null maps, packed decimal, packed ints).
+# Binlog byte codec end-to-end (sources/binlog_codec.py): events → REAL
+# binlog bytes (driver-side encode, sources/binlog_source.py) → the
+# mysql_binlog DataSource batch scan (sources/binlog_datasource.py, the
+# one batch decode path) → envelope, hash-checked against the same
+# derivation done in SQL.  This exercises D1-D12 (headers, table-map,
+# row bitfields/null maps, packed decimal, packed ints).
 # ---------------------------------------------------------------------------
 
 _BINLOG_ORACLE = """
@@ -80,41 +81,65 @@ SELECT * FROM (
 """.strip()
 
 
-def _binlog_envelope_projected(
-    spark, sf_dir, prefix: str, checksum: str | None = None, gtid: bool = False,
-    rows_v2: bool = False, payload_zstd: bool = False, row_image: str = "full",
-):
-    """Shared body of cdc_binlog_envelope / cdc_binlog_crc32 /
-    cdc_binlog_gtid / cdc_binlog_rows_v2: generate the byte fixture
-    (legacy, CRC32-, GTID- or rows-v2-framed), decode, project the
-    envelope with a global seq across rotated files (events-per-
-    transaction varies: 4 legacy, 5 with GTID)."""
+def _fixture(sf_dir, prefix: str, generate=None, **gen_kw) -> str:
+    """The `prefix` byte fixture for `sf_dir`, generated on first use
+    (`generate` defaults to generate_binlog_from_events)."""
     import pathlib
 
     from mysql_cdc_spark.sources import binlog_source as bs
 
-    per_txn = 5 if gtid else 4
     out_dir = pathlib.Path(_STREAM_TMP) / f"{prefix}_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
     if not any(out_dir.glob("binlog.*")):
-        bs.generate_binlog_from_events(
-            sf_dir, str(out_dir), checksum=checksum, gtid=gtid, rows_v2=rows_v2,
-            payload_zstd=payload_zstd, row_image=row_image,
-        )
-    env = bs.read_binlog_envelope(spark, str(out_dir))
-    # Global event number across rotated files: each log file holds
-    # ROTATE_EVERY source events × per_txn envelope events, so
-    # seq_global = file_index * (per_txn * ROTATE_EVERY) + seq_in_file.
-    # Keeps the oracle's per_txn*event_id+k numbering valid at any
-    # scale factor while the sf0.01 gate spans several files (parallel
-    # decode + rotation exercised in the oracle path itself).
-    env = env.withColumn(
-        "seq",
+        (generate or bs.generate_binlog_from_events)(sf_dir, str(out_dir), **gen_kw)
+    return str(out_dir)
+
+
+# Projections for narrow consumers (the DataSource's columns= option):
+# image sides a query never reads are width-walked, not materialized,
+# and unread columns never reach Arrow.  _TYPED_COLS is what
+# binlog_source.typed_changes reads; _AFTER_COLS serves the
+# after-image-only fixture projections.
+_TYPED_COLS = ["log_file", "seq", "offset", "db", "tbl", "op", "row_idx", "before", "after"]
+_AFTER_COLS = ["log_file", "seq", "op", "after"]
+
+
+def _scan(spark, path: str, **options):
+    """format("mysql_binlog") batch scan of `path` with reader options."""
+    from mysql_cdc_spark.sources.binlog_datasource import register_binlog_source
+    from mysql_cdc_spark.sources.reader import read_binlog
+
+    register_binlog_source(spark)
+    return read_binlog(spark, path, **options)
+
+
+def _oracle_seq(per_row: int, payload_zstd: bool = False):
+    """The oracles' global event number, from the DataSource's `seq`.
+
+    The DataSource emits `seq` as the codec FRAME index within a file;
+    the oracles number DELIVERED envelope events across the rotation
+    chain, file k holding ROTATE_EVERY source rows of `per_row` events
+    each (so per_row*event_id+j stays valid at any scale factor while
+    the sf0.01 gate spans several files).  In these fixtures the only
+    frames never delivered are each file's FDE (frame 0) and, in a
+    compressed log, the TRANSACTION_PAYLOAD frame ahead of each
+    transaction's `per_row` inner events."""
+    from mysql_cdc_spark.sources import binlog_source as bs
+
+    pos = F.col("seq") - 1
+    if payload_zstd:
+        pos = pos - 1 - F.floor((pos - 1) / (per_row + 1))
+    return (
         F.regexp_extract("log_file", r"binlog\.(\d+)", 1).cast("bigint")
-        * (per_txn * bs.ROTATE_EVERY)
-        + F.col("seq"),
+        * (per_row * bs.ROTATE_EVERY)
+        + pos
     )
+
+
+def _envelope_projected(env, per_txn: int = 4, payload_zstd: bool = False):
+    """Project a DataSource envelope onto the _BINLOG_ORACLE contract
+    (events per transaction: 4 legacy, 5 with GTID)."""
     return env.select(
-        "seq",
+        _oracle_seq(per_txn, payload_zstd).alias("seq"),
         "op",
         "db",
         "tbl",
@@ -130,6 +155,21 @@ def _binlog_envelope_projected(
         "exec_time",
         "error_code",
     )
+
+
+def _binlog_envelope_projected(
+    spark, sf_dir, prefix: str, checksum: str | None = None, gtid: bool = False,
+    rows_v2: bool = False, payload_zstd: bool = False, row_image: str = "full",
+):
+    """Shared body of cdc_binlog_envelope / cdc_binlog_crc32 /
+    cdc_binlog_gtid / cdc_binlog_rows_v2 / cdc_binlog_zstd /
+    cdc_binlog_minimal: generate the byte fixture, scan it, project
+    the envelope."""
+    env = _scan(spark, _fixture(
+        sf_dir, prefix, checksum=checksum, gtid=gtid, rows_v2=rows_v2,
+        payload_zstd=payload_zstd, row_image=row_image,
+    ))
+    return _envelope_projected(env, 5 if gtid else 4, payload_zstd)
 
 
 # binlog_row_image=MINIMAL oracle: inserts keep the full image; update
@@ -195,19 +235,12 @@ def cdc_binlog_rows_query(spark, sf_dir):
     the window never crosses the rotation boundary), then counts rows
     per statement.  The reference decodes no ROWS_QUERY at all
     (mysql_binlog.clj:222-259 dispatch)."""
-    import pathlib
-
     from pyspark.sql import Window
 
-    from mysql_cdc_spark.sources import binlog_source as bs
-
-    out_dir = (
-        pathlib.Path(_STREAM_TMP)
-        / f"binlog_rq_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
+    env = _scan(
+        spark, _fixture(sf_dir, "binlog_rq", rows_query=True),
+        columns=["log_file", "seq", "op", "sql"],
     )
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_binlog_from_events(sf_dir, str(out_dir), rows_query=True)
-    env = bs.read_binlog_envelope(spark, str(out_dir))
     w = Window.partitionBy("log_file").orderBy("seq")
     attributed = env.withColumn(
         "stmt",
@@ -227,8 +260,8 @@ def cdc_binlog_rows_query(spark, sf_dir):
 @register("cdc_binlog_envelope", _BINLOG_ORACLE)
 def cdc_binlog_envelope(spark, sf_dir):
     """Full binlog fidelity path: encode the derived change stream as
-    real v4 binlog BYTES, decode with the pure-Python codec via
-    binaryFile + mapInPandas, and project the envelope.  The oracle
+    real v4 binlog BYTES, decode with the pure-Python codec through
+    the mysql_binlog DataSource, and project the envelope.  The oracle
     re-derives the same records relationally — so every header, packed
     int, bitfield, null map and packed decimal must round-trip."""
     return _binlog_envelope_projected(spark, sf_dir, "binlog")
@@ -317,21 +350,14 @@ def cdc_binlog_partial_json(spark, sf_dir):
     in closed form — proving diff parse, path navigation, and apply
     semantics end-to-end.  Entirely beyond the reference's event set
     (mysql_binlog.clj:222-259)."""
-    import pathlib
-
     from mysql_cdc_spark.sources import binlog_source as bs
 
-    out_dir = pathlib.Path(_STREAM_TMP) / f"binlog_pjson_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_partial_json_binlog(sf_dir, str(out_dir))
-    env = bs.read_binlog_envelope(spark, str(out_dir))
-    seq_global = (
-        F.regexp_extract("log_file", r"binlog\.(\d+)", 1).cast("bigint")
-        * (3 * bs.ROTATE_EVERY)
-        + F.col("seq")
+    env = _scan(
+        spark, _fixture(sf_dir, "binlog_pjson", bs.generate_partial_json_binlog),
+        columns=["log_file", "seq", "op", "before", "after"],
     )
     return env.filter(F.col("op") == "update_rows").select(
-        seq_global.alias("seq"),
+        _oracle_seq(3).alias("seq"),
         F.element_at("after", "id").cast("bigint").alias("id"),
         F.element_at("before", "doc").alias("before_doc"),
         F.element_at("after", "doc").alias("after_doc"),
@@ -385,22 +411,12 @@ def cdc_binlog_typed_state(spark, sf_dir):
     """Typed per-table view over the binlog-decoded MAP envelope
     (dynamic→typed bridge), replayed into current state of foo.auto:
     one max_by aggregation per key over the real byte-decoded stream."""
-    import pathlib
-
     from mysql_cdc_spark.sources import binlog_source as bs
 
-    out_dir = pathlib.Path(_STREAM_TMP) / f"binlog_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_binlog_from_events(sf_dir, str(out_dir))
-    env = bs.read_binlog_envelope(spark, str(out_dir))
+    env = _scan(spark, _fixture(sf_dir, "binlog"), columns=_TYPED_COLS)
     # Same global event numbering as cdc_binlog_envelope: replay order
     # across rotated files must follow (file, seq_in_file).
-    env = env.withColumn(
-        "seq",
-        F.regexp_extract("log_file", r"binlog\.(\d+)", 1).cast("bigint")
-        * (4 * bs.ROTATE_EVERY)
-        + F.col("seq"),
-    )
+    env = env.withColumn("seq", _oracle_seq(4))
     typed = bs.typed_changes(
         env, "foo", "auto", {"id": "bigint", "val": "string", "word": "string"}
     )
@@ -447,25 +463,22 @@ SELECT id, val, word FROM (
 )
 def cdc_binlog_pushdown(spark, sf_dir):
     """Filter-before-decode pushdown end-to-end (r14 VERDICT #1): the
-    (db, tbl) predicate pushed INTO the byte codec via
-    `typed_changes_scan` — foreign tables' row events (half the
+    (db, tbl) predicate pushed INTO the byte codec via the
+    DataSource's ``only_tables`` option — foreign tables' row events (half the
     multi-table log) skip image parsing entirely; headers and
     TABLE_MAPs still decode so map state threads across skipped
     frames.  Replays foo.auto to latest state ordered by the stable
-    (file, offset) identity — envelope seq is delivery-order under
-    pushdown, so the byte offset is the replay key (reference anchor:
+    (file, offset) identity (reference anchor:
     mysql_binlog.clj:592-604 decodes every used column; SURVEY §4
     names the skip as the custom gain)."""
-    import pathlib
-
     from mysql_cdc_spark.sources import binlog_source as bs
 
-    out_dir = pathlib.Path(_STREAM_TMP) / f"binlog_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_binlog_from_events(sf_dir, str(out_dir))
-    typed = bs.typed_changes_scan(
-        spark, str(out_dir), "foo", "auto",
-        {"id": "bigint", "val": "string", "word": "string"},
+    typed = bs.typed_changes(
+        _scan(
+            spark, _fixture(sf_dir, "binlog"), only_tables="foo.auto",
+            columns=_TYPED_COLS,
+        ),
+        "foo", "auto", {"id": "bigint", "val": "string", "word": "string"},
     )
     keyed = typed.selectExpr(
         "coalesce(after_id, before_id) AS id",
@@ -508,7 +521,7 @@ FROM ins GROUP BY db, tbl, id
 )
 def cdc_binlog_only_ops(spark, sf_dir):
     """Delta-type pushdown end-to-end (r15 VERDICT #7): an INSERT-ONLY
-    consumer passes ``only_ops={'write_rows'}`` and the codec never
+    consumer passes ``only_ops=write_rows`` and the codec never
     parses update/delete row images — the frame length makes the skip
     free, symmetric to the (db, tbl) pushdown (same seq-slot + CRC
     contract; parity pinned in tests/test_binlog_only_ops.py).
@@ -516,15 +529,9 @@ def cdc_binlog_only_ops(spark, sf_dir):
     tables.  Reference anchor: jdbc.clj:180-182 filters delta-type
     AFTER decode; SURVEY §4 names filter-before-decode as the custom
     gain this completes."""
-    import pathlib
-
-    from mysql_cdc_spark.sources import binlog_source as bs
-
-    out_dir = pathlib.Path(_STREAM_TMP) / f"binlog_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_binlog_from_events(sf_dir, str(out_dir))
-    env = bs.read_binlog_envelope(
-        spark, str(out_dir), only_ops={"write_rows"}
+    env = _scan(
+        spark, _fixture(sf_dir, "binlog"), only_ops="write_rows",
+        columns=["db", "tbl", "op", "after"],
     )
     ins = env.filter(F.col("op") == "write_rows").selectExpr(
         "db", "tbl",
@@ -581,16 +588,14 @@ def cdc_binlog_schema_evo(spark, sf_dir):
     straight off the wire.  Reference anchor: mysql_binlog.clj:975-976 — the
     planned-but-never-built DDL story.  Golden byte vector: FILE F in
     tests/test_golden_vectors.py."""
-    import pathlib
-
     from mysql_cdc_spark.sources import binlog_source as bs
 
-    out_dir = pathlib.Path(_STREAM_TMP) / f"binlog_sevo_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_schema_evo_binlog(sf_dir, str(out_dir))
-    typed = bs.typed_changes_scan(
-        spark, str(out_dir), "lab", "acct",
-        {"id": "bigint", "val": "string", "score": "bigint"},
+    typed = bs.typed_changes(
+        _scan(
+            spark, _fixture(sf_dir, "binlog_sevo", bs.generate_schema_evo_binlog),
+            only_tables="lab.acct", columns=_TYPED_COLS,
+        ),
+        "lab", "acct", {"id": "bigint", "val": "string", "score": "bigint"},
     )
     keyed = typed.selectExpr(
         "after_id AS id",
@@ -658,16 +663,14 @@ def cdc_binlog_schema_evo_drop(spark, sf_dir):
     three maps.  Golden byte vector: FILE H in
     tests/test_golden_vectors.py.  Reference anchor:
     mysql_binlog.clj:975-976 (the planned DDL story)."""
-    import pathlib
-
     from mysql_cdc_spark.sources import binlog_source as bs
 
-    out_dir = pathlib.Path(_STREAM_TMP) / f"binlog_sevod_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_schema_evo_drop_binlog(sf_dir, str(out_dir))
-    typed = bs.typed_changes_scan(
-        spark, str(out_dir), "lab", "acct",
-        {"id": "bigint", "val": "string", "score": "bigint"},
+    typed = bs.typed_changes(
+        _scan(
+            spark, _fixture(sf_dir, "binlog_sevod", bs.generate_schema_evo_drop_binlog),
+            only_tables="lab.acct", columns=_TYPED_COLS,
+        ),
+        "lab", "acct", {"id": "bigint", "val": "string", "score": "bigint"},
     )
     keyed = typed.selectExpr(
         "after_id AS id",
@@ -726,28 +729,25 @@ SELECT op, db, tbl, n_events, n_ids FROM (
 )
 def cdc_binlog_since(spark, sf_dir):
     """Bounded replay from a journaled position (r15, the binlog
-    analog of PARTITION PRUNING): `read_binlog_envelope(since=
-    (log_file, offset))` prunes earlier rotated files DRIVER-SIDE —
-    they never enter the Spark scan — and cuts the boundary file at
-    the offset.  A 100 TB resume must not relist or redecode history.
+    analog of PARTITION PRUNING): the ``since_file``/``since_offset``
+    options prune earlier rotated files DRIVER-SIDE — they never enter
+    the Spark scan — and cut the boundary file at the offset.  A 100 TB resume must not relist or redecode history.
     The gate resumes at the midpoint FILE of the rotation chain
     (binlog.%06d of file ⌈n/2500⌉//2, offset 4) and aggregates the
     remaining stream per (op, db, tbl); the oracle replays the same
     suffix from events by row number.  Mid-file offsets are pinned by
     parity tests (byte offsets are not SQL-expressible)."""
     import math
-    import pathlib
 
     from mysql_cdc_spark.sources import binlog_source as bs
     from mysql_cdc_spark.sources.io import read_table
 
-    out_dir = pathlib.Path(_STREAM_TMP) / f"binlog_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_binlog_from_events(sf_dir, str(out_dir))
+    out_dir = _fixture(sf_dir, "binlog")
     n = read_table(spark, sf_dir, "events").count()
     mid_file = math.ceil(n / bs.ROTATE_EVERY) // 2
-    env = bs.read_binlog_envelope(
-        spark, str(out_dir), since=(f"binlog.{mid_file:06d}", 4)
+    env = _scan(
+        spark, out_dir, since_file=f"binlog.{mid_file:06d}", since_offset=4,
+        columns=["db", "tbl", "op", "before", "after"],
     )
     id_expr = (
         "CAST(coalesce(element_at(after, 'id'), element_at(before, 'id')) AS BIGINT)"
@@ -785,14 +785,12 @@ def cdc_binlog_tags_typed(spark, sf_dir):
     string payload cast to typed columns — ENUM ordinal to INT, SET
     little-endian hex back to its BIGINT bitset (conv() reverses the
     byte order; engine-neutral via the oracle's closed form)."""
-    import pathlib
-
     from mysql_cdc_spark.sources import binlog_source as bs
 
-    out_dir = pathlib.Path(_STREAM_TMP) / f"binlog_enumset_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_enum_set_binlog(sf_dir, str(out_dir))
-    env = bs.read_binlog_envelope(spark, str(out_dir))
+    env = _scan(
+        spark, _fixture(sf_dir, "binlog_enumset", bs.generate_enum_set_binlog),
+        columns=_AFTER_COLS,
+    )
 
     def hex_le_to_long(col: str):
         # reverse the little-endian byte hex (pairs) then conv base 16
@@ -802,15 +800,9 @@ def cdc_binlog_tags_typed(spark, sf_dir):
             f"  i -> substring(element_at(after, '{col}'), i * 2 + 1, 2))), ''), 16, 10)"
         ).cast("bigint")
 
-    # 3 envelope events per source row; global seq across the rotation
-    # chain (see cdc_binlog_enum_set).
-    seq_global = (
-        F.regexp_extract("log_file", r"binlog\.(\d+)", 1).cast("bigint")
-        * (3 * bs.ROTATE_EVERY)
-        + F.col("seq")
-    )
+    # 3 envelope events per source row (TABLE_MAP, WRITE_ROWS, XID)
     return env.filter(F.col("op") == "write_rows").select(
-        seq_global.alias("seq"),
+        _oracle_seq(3).alias("seq"),
         F.element_at("after", "id").cast("bigint").alias("id"),
         F.element_at("after", "state").cast("int").alias("state_ordinal"),
         hex_le_to_long("flags").alias("flags_bits"),
@@ -834,9 +826,7 @@ def cdc_binlog_stream(spark, sf_dir):
     from mysql_cdc_spark.streaming import runtime as rt
     from mysql_cdc_spark.streaming.binlog_tailer import BinlogTailer
 
-    binlog_dir = pathlib.Path(_STREAM_TMP) / f"binlog_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
-    if not any(binlog_dir.glob("binlog.*")):
-        bs.generate_binlog_from_events(sf_dir, str(binlog_dir))
+    binlog_dir = pathlib.Path(_fixture(sf_dir, "binlog"))
     first_log = sorted(p.name for p in binlog_dir.glob("binlog.*"))[0]
 
     scratch = pathlib.Path(_STREAM_TMP) / _scratch_name("blstream")
@@ -894,28 +884,18 @@ def cdc_binlog_enum_set(spark, sf_dir):
     """ENUM + SET columns through the full byte path (reference
     read-type, mysql_binlog.clj:530-536): encode bench.tags (both ENUM
     ordinal widths, both SET bitset widths, NULLable ENUM) as real
-    binlog bytes, decode via binaryFile + mapInPandas, and project the
-    after-images.  ENUM surfaces as its 1-based ordinal; SET as the
+    binlog bytes, decode through the mysql_binlog DataSource, and
+    project the after-images.  ENUM surfaces as its 1-based ordinal; SET as the
     little-endian hex of its raw bitset bytes."""
-    import pathlib
-
     from mysql_cdc_spark.sources import binlog_source as bs
 
-    out_dir = pathlib.Path(_STREAM_TMP) / f"binlog_enumset_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_enum_set_binlog(sf_dir, str(out_dir))
-    env = bs.read_binlog_envelope(spark, str(out_dir))
-    # 3 envelope events per source row (TABLE_MAP, WRITE_ROWS, XID);
-    # rotated files hold ROTATE_EVERY rows each, so seq_global =
-    # file_index * (3 * ROTATE_EVERY) + seq_in_file keeps the oracle's
-    # 3k+1 numbering valid across the rotation chain.
-    seq_global = (
-        F.regexp_extract("log_file", r"binlog\.(\d+)", 1).cast("bigint")
-        * (3 * bs.ROTATE_EVERY)
-        + F.col("seq")
+    env = _scan(
+        spark, _fixture(sf_dir, "binlog_enumset", bs.generate_enum_set_binlog),
+        columns=_AFTER_COLS,
     )
+    # 3 envelope events per source row (TABLE_MAP, WRITE_ROWS, XID)
     return env.filter(F.col("op") == "write_rows").select(
-        seq_global.alias("seq"),
+        _oracle_seq(3).alias("seq"),
         F.element_at("after", "id").cast("bigint").alias("id"),
         F.element_at("after", "state").alias("state"),
         F.element_at("after", "wide").alias("wide"),
@@ -963,27 +943,17 @@ def cdc_binlog_wide_types(spark, sf_dir):
     round-trips), YEAR, DATE, packed DATETIME2/TIMESTAMP2/TIME2 with
     0/2/3-digit fractional seconds (TIME2 exercising negative values
     through the offset-binary sign), and BLOB (hex in the envelope).
-    Encode bench.wide as real binlog bytes, decode via binaryFile +
-    mapInPandas, project + cast the after-images; the oracle recomputes
+    Encode bench.wide as real binlog bytes, decode through the
+    mysql_binlog DataSource, project + cast the after-images; the oracle recomputes
     every column in closed form from event_id."""
-    import pathlib
-
     from mysql_cdc_spark.sources import binlog_source as bs
 
-    out_dir = pathlib.Path(_STREAM_TMP) / f"binlog_wide_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_wide_binlog(sf_dir, str(out_dir))
-    env = bs.read_binlog_envelope(spark, str(out_dir))
-    after = F.col("after")
-    # 3 envelope events per source row; global seq across the rotation
-    # chain (see cdc_binlog_enum_set).
-    seq_global = (
-        F.regexp_extract("log_file", r"binlog\.(\d+)", 1).cast("bigint")
-        * (3 * bs.ROTATE_EVERY)
-        + F.col("seq")
+    env = _scan(
+        spark, _fixture(sf_dir, "binlog_wide", bs.generate_wide_binlog), columns=_AFTER_COLS
     )
+    after = F.col("after")
     return env.filter(F.col("op") == "write_rows").select(
-        seq_global.alias("seq"),
+        _oracle_seq(3).alias("seq"),
         *[
             F.element_at(after, c).cast("bigint").alias(c)
             for c in ("id", "t8", "t16", "t24", "t64")
@@ -1022,22 +992,14 @@ def cdc_binlog_utf8mb4(spark, sf_dir):
     mysql_binlog.clj:537-544) would surface mojibake and hash-mismatch
     against the oracle's native strings; the VARBINARY column must
     STAY bytes (hex in the envelope)."""
-    import pathlib
-
     from mysql_cdc_spark.sources import binlog_source as bs
 
-    out_dir = pathlib.Path(_STREAM_TMP) / f"binlog_utf8_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_utf8_binlog(sf_dir, str(out_dir))
-    env = bs.read_binlog_envelope(spark, str(out_dir))
-    after = F.col("after")
-    seq_global = (
-        F.regexp_extract("log_file", r"binlog\.(\d+)", 1).cast("bigint")
-        * (3 * bs.ROTATE_EVERY)
-        + F.col("seq")
+    env = _scan(
+        spark, _fixture(sf_dir, "binlog_utf8", bs.generate_utf8_binlog), columns=_AFTER_COLS
     )
+    after = F.col("after")
     return env.filter(F.col("op") == "write_rows").select(
-        seq_global.alias("seq"),
+        _oracle_seq(3).alias("seq"),
         F.element_at(after, "id").cast("bigint").alias("id"),
         F.element_at(after, "name").alias("name"),
         F.element_at(after, "tag").alias("tag"),
@@ -1078,22 +1040,15 @@ def cdc_binlog_json_bit(spark, sf_dir):
     form (", "/": " separators, sorted-key binary order), so the
     oracle recomputes every document with printf.  None of these types
     exist in the reference (read-type, mysql_binlog.clj:558 throws)."""
-    import pathlib
-
     from mysql_cdc_spark.sources import binlog_source as bs
 
-    out_dir = pathlib.Path(_STREAM_TMP) / f"binlog_jsonbit_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_json_bit_binlog(sf_dir, str(out_dir))
-    env = bs.read_binlog_envelope(spark, str(out_dir))
-    after = F.col("after")
-    seq_global = (
-        F.regexp_extract("log_file", r"binlog\.(\d+)", 1).cast("bigint")
-        * (3 * bs.ROTATE_EVERY)
-        + F.col("seq")
+    env = _scan(
+        spark, _fixture(sf_dir, "binlog_jsonbit", bs.generate_json_bit_binlog),
+        columns=_AFTER_COLS,
     )
+    after = F.col("after")
     return env.filter(F.col("op") == "write_rows").select(
-        seq_global.alias("seq"),
+        _oracle_seq(3).alias("seq"),
         F.element_at(after, "id").cast("bigint").alias("id"),
         F.element_at(after, "doc").alias("doc"),
         F.element_at(after, "flags").cast("bigint").alias("flags"),
@@ -1121,14 +1076,12 @@ def cdc_binlog_json_extract(spark, sf_dir):
     extract typed fields for a relational aggregation — the end-to-end
     shape of real CDC-to-analytics pipelines on document columns.  The
     oracle recomputes the distribution in closed form from event_id."""
-    import pathlib
-
     from mysql_cdc_spark.sources import binlog_source as bs
 
-    out_dir = pathlib.Path(_STREAM_TMP) / f"binlog_jsonbit_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_json_bit_binlog(sf_dir, str(out_dir))
-    env = bs.read_binlog_envelope(spark, str(out_dir))
+    env = _scan(
+        spark, _fixture(sf_dir, "binlog_jsonbit", bs.generate_json_bit_binlog),
+        columns=["op", "after"],
+    )
     doc = F.element_at(F.col("after"), "doc")
     return (
         env.filter(F.col("op") == "write_rows")
@@ -1159,17 +1112,10 @@ def cdc_binlog_quarantine(spark, sf_dir):
     CONTINUES (the reference crashes on the first malformed event,
     mysql_binlog.clj:727-729; production CDC must drain past poison).
     The oracle derives which events were poisoned and which survive."""
-    import pathlib
-
-    from mysql_cdc_spark.sources import binlog_source as bs
-
-    out_dir = (
-        pathlib.Path(_STREAM_TMP)
-        / f"binlog_corrupt_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
+    env = _scan(
+        spark, _fixture(sf_dir, "binlog_corrupt", corrupt_every=101),
+        on_error="quarantine", columns=["op"],
     )
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_binlog_from_events(sf_dir, str(out_dir), corrupt_every=101)
-    env = bs.read_binlog_envelope(spark, str(out_dir), on_error="quarantine")
     return (
         env.where(
             F.col("op").isin("write_rows", "update_rows", "delete_rows", "quarantine")
@@ -1192,64 +1138,12 @@ def cdc_binlog_quarantine(spark, sf_dir):
 
 def _ds_fixture(spark, sf_dir, prefix: str = "binlog"):
     """The standard envelope byte fixture + a registered DataSource."""
-    import pathlib
-
-    from mysql_cdc_spark.sources import binlog_source as bs
     from mysql_cdc_spark.sources.binlog_datasource import (
         register_binlog_source,
     )
 
-    out_dir = (
-        pathlib.Path(_STREAM_TMP)
-        / f"{prefix}_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
-    )
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_binlog_from_events(sf_dir, str(out_dir))
     register_binlog_source(spark)
-    return str(out_dir)
-
-
-def _ds_envelope_projected(env):
-    """Project a DataSource envelope onto the _BINLOG_ORACLE contract.
-
-    The DataSource emits `seq` as the codec FRAME index (pushdown-
-    invariant); the oracle numbers DELIVERED envelope events.  A
-    per-file dense_rank over the emitted frame seqs (non-envelope
-    frames are never emitted) recovers delivered numbering exactly,
-    then the rotation arithmetic lifts it to the global oracle
-    numbering.  The window is partitioned by log_file — at scale this
-    is one shuffle by the natural decode unit, and it exists only for
-    oracle presentation (consumers use (log_file, offset, row_idx))."""
-    from pyspark.sql import Window
-
-    from mysql_cdc_spark.sources import binlog_source as bs
-
-    w = Window.partitionBy("log_file").orderBy("seq")
-    env = env.withColumn(
-        "seq",
-        (F.dense_rank().over(w) - 1).cast("bigint")
-        + F.regexp_extract("log_file", r"binlog\.(\d+)", 1).cast("bigint")
-        * (4 * bs.ROTATE_EVERY),
-    )
-    return env.select(
-        "seq",
-        "op",
-        "db",
-        "tbl",
-        "xid",
-        "sql",
-        F.element_at("before", "id").cast("bigint").alias("before_id"),
-        F.element_at("before", "val").alias("before_val"),
-        F.element_at("before", "word").alias("before_word"),
-        F.element_at("after", "id").cast("bigint").alias("after_id"),
-        F.element_at("after", "val").alias("after_val"),
-        F.element_at("after", "word").alias("after_word"),
-        "thread_id",
-        "exec_time",
-        "error_code",
-    )
-
-
+    return _fixture(sf_dir, prefix)
 
 
 def _sf_tag(sf_dir: str) -> str:
@@ -1277,26 +1171,16 @@ def _failover_dirs(sf_dir: str) -> tuple[str, str]:
     cdc_ds_gtid_failover and cdc_ds_failover_state: the gates share
     the directories by name, so a drifting copy of this block would
     silently reuse a stale fixture against a changed oracle."""
-    import pathlib
-
-    from mysql_cdc_spark.sources import binlog_source as bs
-
     n = _max_event_id(sf_dir) + 1
     e40, e60 = (n * 4) // 10, (n * 6) // 10
-    tag = _sf_tag(sf_dir)
-    dir_a = pathlib.Path(_STREAM_TMP) / f"binlog_failover_a_{tag}_v{_FIXTURE_VERSION}"
-    dir_b = pathlib.Path(_STREAM_TMP) / f"binlog_failover_b_{tag}_v{_FIXTURE_VERSION}"
-    if not any(dir_a.glob("binlog.*")):
-        bs.generate_binlog_from_events(
-            sf_dir, str(dir_a), gtid=True, prev_gtids=True, checksum="crc32",
-            event_range=(0, e60),
-        )
-    if not any(dir_b.glob("binlog.*")):
-        bs.generate_binlog_from_events(
-            sf_dir, str(dir_b), gtid=True, prev_gtids=True, checksum="crc32",
-            event_range=(e40, n), renumber_files=True,
-        )
-    return str(dir_a), str(dir_b)
+    gtid = dict(gtid=True, prev_gtids=True, checksum="crc32")
+    return (
+        _fixture(sf_dir, "binlog_failover_a", event_range=(0, e60), **gtid),
+        _fixture(
+            sf_dir, "binlog_failover_b", event_range=(e40, n),
+            renumber_files=True, **gtid,
+        ),
+    )
 
 
 def _drain_files(spark, stream, prefix: str):
@@ -1337,13 +1221,12 @@ def cdc_ds_envelope(spark, sf_dir):
     """Full envelope fidelity through the PySpark 4 Python Data Source
     API: spark.read.format("mysql_binlog") plans one InputPartition
     per rotated file, executors decode whole files and hand Spark
-    arrow RecordBatches.  Same oracle as cdc_binlog_envelope — the
-    two scan paths (binaryFile+mapInPandas vs DataSource) must agree
-    byte-for-byte.  Reference anchor: mysql_binlog.clj:907-938 is a
+    arrow RecordBatches.  Same oracle as cdc_binlog_envelope, with the
+    scan spelled out at the format() level.  Reference anchor: mysql_binlog.clj:907-938 is a
     driver-side tailer; the DataSource is its Spark-native batch
     form."""
     env = spark.read.format("mysql_binlog").load(_ds_fixture(spark, sf_dir))
-    return _ds_envelope_projected(env)
+    return _envelope_projected(env)
 
 
 @register(
@@ -1424,7 +1307,7 @@ def cdc_ds_stream_envelope(spark, sf_dir):
     exactly-once contract."""
     fixture = _ds_fixture(spark, sf_dir)
     stream = spark.readStream.format("mysql_binlog").load(fixture)
-    return _ds_envelope_projected(
+    return _envelope_projected(
         _drain_files(spark, stream, f"ds_env_sink_{_sf_tag(sf_dir)}")
     )
 
@@ -1490,18 +1373,14 @@ def cdc_ds_schema_evo(spark, sf_dir):
     column names come off the wire, through arrow ingest, and the
     typed view's (db, tbl, op) filter rides Spark's own pushFilters
     into the codec's image-parse skip (no only_tables keyword
-    anywhere).  Same oracle as cdc_binlog_schema_evo: the two scan
-    protocols must agree across the schema boundary."""
-    import pathlib
-
+    anywhere).  Same oracle as cdc_binlog_schema_evo, which reaches
+    the codec skip through the only_tables option instead."""
     from mysql_cdc_spark.sources import binlog_source as bs
     from mysql_cdc_spark.sources.binlog_datasource import (
         register_binlog_source,
     )
 
-    out_dir = pathlib.Path(_STREAM_TMP) / f"binlog_sevo_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_schema_evo_binlog(sf_dir, str(out_dir))
+    out_dir = _fixture(sf_dir, "binlog_sevo", bs.generate_schema_evo_binlog)
     register_binlog_source(spark)
     env = (
         spark.read.format("mysql_binlog")
@@ -1893,24 +1772,15 @@ def cdc_ds_since_gtid(spark, sf_dir):
     per-op event counts closed-form (gno = event_id + 1, five
     envelope events per transaction under gtid framing).  Reference
     has no GTID handling at all (mysql_binlog.clj:222-259)."""
-    import pathlib
-
     from mysql_cdc_spark.sources import binlog_source as bs
     from mysql_cdc_spark.sources.binlog_datasource import (
         register_binlog_source,
     )
 
-    out_dir = (
-        pathlib.Path(_STREAM_TMP)
-        / f"binlog_gtidset_{_sf_tag(sf_dir)}_v{_FIXTURE_VERSION}"
+    fixture = _fixture(
+        sf_dir, "binlog_gtidset", gtid=True, prev_gtids=True, checksum="crc32"
     )
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_binlog_from_events(
-            sf_dir, str(out_dir), gtid=True, prev_gtids=True,
-            checksum="crc32",
-        )
     register_binlog_source(spark)
-    fixture = str(out_dir)
     tmax = (
         spark.read.format("mysql_binlog")
         .option("columns", "ts")
@@ -1955,22 +1825,13 @@ def cdc_ds_gtid_handoff(spark, sf_dir):
     so the set is one dense interval 1..max+1).  Driver-side by
     design — the executed set is an O(one-file) metadata read, not a
     distributed computation."""
-    import pathlib
-
     from mysql_cdc_spark.sources import binlog_source as bs
-
-    out_dir = (
-        pathlib.Path(_STREAM_TMP)
-        / f"binlog_gtidset_{_sf_tag(sf_dir)}_v{_FIXTURE_VERSION}"
-    )
-    if not any(out_dir.glob("binlog.*")):
-        bs.generate_binlog_from_events(
-            sf_dir, str(out_dir), gtid=True, prev_gtids=True,
-            checksum="crc32",
-        )
     from mysql_cdc_spark.sources.binlog_codec import gtid_set_text
 
-    text = gtid_set_text(bs.executed_gtid_set(str(out_dir)))
+    out_dir = _fixture(
+        sf_dir, "binlog_gtidset", gtid=True, prev_gtids=True, checksum="crc32"
+    )
+    text = gtid_set_text(bs.executed_gtid_set(out_dir))
     return spark.createDataFrame([(text,)], "executed string")
 
 
@@ -2287,11 +2148,9 @@ def cdc_stream_state_schema_evo(spark, sf_dir):
         register_binlog_source,
     )
 
-    sevo_dir = pathlib.Path(_STREAM_TMP) / (
-        f"binlog_sevo_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
+    sevo_dir = pathlib.Path(
+        _fixture(sf_dir, "binlog_sevo", bs.generate_schema_evo_binlog)
     )
-    if not any(sevo_dir.glob("binlog.*")):
-        bs.generate_schema_evo_binlog(sf_dir, str(sevo_dir))
     register_binlog_source(spark)
 
     _gc_scratch(_STREAM_TMP, "sevostate")

@@ -1,6 +1,6 @@
 """MySQL binlog byte codec (SURVEY §2.2 D1-D12): pure-Python encode +
-decode of the v4 row-based binary log, exposed to Spark as a
-`binaryFile` scan + `mapInPandas` decode (sources/binlog_source.py).
+decode of the v4 row-based binary log, exposed to Spark as the
+``mysql_binlog`` Python DataSource (sources/binlog_datasource.py).
 
 Implemented from the PUBLIC MySQL binary-log format (binlog event
 header/type layouts and the strings/decimal.c packed-decimal format as

@@ -1,10 +1,11 @@
 """``mysql_binlog`` Spark DataSource (PySpark 4 Python Data Source API).
 
 ``spark.read.format("mysql_binlog").load(dir)`` scans a rotated binlog
-directory into the generic envelope with ONE input partition per log
-file (decode is inherently serial within a file — events are
+directory into the generic envelope, whole files per input partition
+(decode is inherently serial within a file — events are
 offset-chained and table-map state threads through — and
-embarrassingly parallel across files), and
+embarrassingly parallel across files; small files bin-pack, oversized
+ones split at frame boundaries), and
 ``spark.readStream.format("mysql_binlog").load(dir)`` tails the same
 directory as a Structured Streaming source: frame-aligned offsets are
 checkpointed in Spark's own offset WAL (exactly-once on restart),
@@ -47,11 +48,10 @@ restart the plan-state cache is empty and the executor rebuilds the
 slice state from ITS OWN file's head (`prefix replay`, bounded by one
 file, never by history).
 
-Planning lists and reads files with local filesystem APIs: the
-directory must be reachable from the driver and executors via
-``open()`` (local disk / NFS / fuse mounts).  For object-store scans
-use :func:`mysql_cdc_spark.sources.binlog_source.read_binlog_envelope`,
-which plans through Spark's ``binaryFile`` source.
+This is the one batch decode path for binlog bytes.  Planning lists
+and reads files with local filesystem APIs: the directory must be
+reachable from the driver and executors via ``open()`` (local disk,
+NFS, or a FUSE-mounted bucket).
 """
 
 from __future__ import annotations
@@ -110,16 +110,20 @@ from mysql_cdc_spark.sources.binlog_source import (
 # Where useful event bytes start in every binlog file: 4-byte magic.
 _DATA_START = 4
 
-# Small-file packing never produces fewer than ~this many partitions
-# (unless the 1 MB per-pack floor binds first): keeps pruned/small
-# scans parallel while pack_bytes bounds per-task work at scale.
-_PACK_MIN_FANOUT = 128
+
+def _pack_min_fanout() -> int:
+    """Small-file packing never produces fewer than ~this many
+    partitions (unless the 1 MB per-pack floor binds first): two per
+    core the planner process may run on, so pruned/small scans stay
+    parallel without fanning out into more tasks than the host can
+    overlap, while pack_bytes bounds per-task work at scale."""
+    return 2 * len(os.sched_getaffinity(0))
 
 
 def _bin_pack(items: list, sizes: list, pack_bytes: int) -> list:
     """Greedy order-preserving bin-pack shared by the batch scan and
     the stream catch-up planner.  Per-bin target =
-    min(pack_bytes, max(1 MB floor, total / _PACK_MIN_FANOUT)):
+    min(pack_bytes, max(1 MB floor, total / _pack_min_fanout())):
     pack_bytes caps per-task decode work at scale, the fan-out floor
     keeps small/pruned scans parallel, and an explicit pack_bytes
     below the floor is honored as given.  Returns a list of bins
@@ -127,7 +131,7 @@ def _bin_pack(items: list, sizes: list, pack_bytes: int) -> list:
     total = sum(sizes)
     target = min(
         pack_bytes,
-        max(min(1_000_000, pack_bytes), total // _PACK_MIN_FANOUT),
+        max(min(1_000_000, pack_bytes), total // _pack_min_fanout()),
     )
     bins: list = []
     cur: list = []
@@ -187,9 +191,9 @@ def _parse_ops(s: str | None) -> set[str] | None:
 
 def _parse_catalog(s: str | None) -> dict[tuple[str, str], list[str]]:
     """JSON ``{"db.tbl": ["col", ...]}`` → codec catalog.  Absent →
-    the fixture catalog (mirroring ``read_binlog_envelope``'s default);
-    an EXPLICIT ``"{}"`` means no catalog (names come from on-wire
-    COLUMN_NAME TLVs or ordinals)."""
+    the fixture catalog (FIXTURE_CATALOG); an EXPLICIT ``"{}"`` means
+    no catalog (names come from on-wire COLUMN_NAME TLVs or
+    ordinals)."""
     if s is None:
         return FIXTURE_CATALOG
     raw = json.loads(s)
@@ -213,7 +217,7 @@ class _Opts:
             raise ValueError(
                 "mysql_binlog requires a path: .load('/dir/of/binlogs')"
             )
-        # binaryFile-style URIs may arrive with a file: scheme; planning
+        # URIs may arrive with a file: scheme; planning
         # and reads use plain open(), so strip it.
         if path.startswith("file:"):
             path = path[len("file:"):]
@@ -262,8 +266,9 @@ class _Opts:
         # thousands of sub-MB files — one task per file makes the scan
         # TASK-OVERHEAD-BOUND (measured at x100: every DataSource
         # variant flatlined at the ~4000-wave scheduling floor while
-        # binaryFile bin-packed past it).  Whole files pack greedily
-        # into partitions of ~pack_bytes decode work; "0" disables.
+        # Spark's binaryFile reader bin-packed past it).  Whole files
+        # pack greedily into partitions of ~pack_bytes decode work;
+        # "0" disables.
         pb = options.get("pack_bytes")
         self.pack_bytes = int(pb) if pb is not None else 32_000_000
         cols = options.get("columns")
@@ -896,9 +901,8 @@ class _BinlogBatchReader(DataSourceReader):
                 o.images,
                 stringify=True,
             )
-            cols, _ = envelope_columns(
-                events, partition.log_file, frame_seq=True,
-                stringified=True,
+            cols = envelope_columns(
+                events, partition.log_file, stringified=True
             )
             if (
                 o.since_file is not None
@@ -968,9 +972,8 @@ class _BinlogBatchReader(DataSourceReader):
                 stringify=True,
             )
             events += more
-        cols, _ = envelope_columns(
-            events, os.path.basename(fpath), frame_seq=True,
-            stringified=True,
+        cols = envelope_columns(
+            events, os.path.basename(fpath), stringified=True
         )
         if cut:
             cols = _cut_offset_prefix(cols, cut)
@@ -1456,9 +1459,7 @@ class _BinlogStreamReader(DataSourceStreamReader):
                 sl, o.catalog, o.on_error, o.only_tables, o.only_ops,
                 o.images, stringify=True,
             )
-            cols, _ = envelope_columns(
-                events, sl.log_file, frame_seq=True, stringified=True
-            )
+            cols = envelope_columns(events, sl.log_file, stringified=True)
             yield _arrow_batch(cols, o.columns)
 
     def stop(self) -> None:

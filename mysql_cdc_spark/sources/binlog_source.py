@@ -1,15 +1,12 @@
-"""Spark integration for the binlog codec: `binaryFile` scan +
-`mapInPandas` decode into the generic MAP-payload envelope (SURVEY
+"""The generic MAP-payload envelope over decoded binlog events (SURVEY
 §1.4 — dynamic per-table schemas; the nil-vs-'_' distinction survives
-as value-None vs key-absent in the MAP images).
+as value-None vs key-absent in the MAP images), the rotated-log
+listing, and the byte-fixture writers.
 
-Plan shape: one task per binlog file — decoding a log is inherently
-sequential WITHIN a file (events are offset-chained, table-map state
-threads through — reference read-binlog, mysql_binlog.clj:707-752),
-and embarrassingly parallel ACROSS files; at 100 TB a binlog directory
-is thousands of rotated files, so the `binaryFile` scan parallelizes
-per file.  The Python decode is Arrow-batched via `mapInPandas` (never
-row-at-a-time UDFs).
+There is one batch decode path for binlog bytes: the ``mysql_binlog``
+DataSource (sources/binlog_datasource.py), which builds its Arrow
+batches with `envelope_columns`.  The streaming tailer bridge and the
+push path flatten events with `envelope_records`.
 
 The writer half (fixture generation from the `events` table) gives the
 codec an end-to-end oracle: encode driver-side → decode on executors →
@@ -20,10 +17,9 @@ from __future__ import annotations
 
 import os
 import re
-from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from mysql_cdc_spark.sources.binlog_codec import (
@@ -55,7 +51,6 @@ from mysql_cdc_spark.sources.binlog_codec import (
     WRITE_ROWS_EVENT,
     BinlogWriter,
     TableDef,
-    decode_binlog,
 )
 
 # Real column names for the fixture tables — the catalog lookup the
@@ -197,7 +192,7 @@ def envelope_records(
     image pair; non-row events emit one record).  Returns (records,
     next_seq) so callers that deliver a file's events across several
     batches — the incremental tailer — keep per-file seq continuity.
-    Shared by the batch binaryFile path and the streaming bridge.
+    Used by the streaming bridge and the push path.
 
     ``only_tables`` drops row-event records for tables outside the set
     (non-row events always pass).  This is the record-level half of the
@@ -271,27 +266,22 @@ _ENVELOPE_COLS = (
 
 
 def envelope_columns(
-    events: list[dict], log_file: str, seq_start: int = 0,
-    only_tables: set[tuple[str, str]] | None = None,
-    only_ops: set[str] | None = None,
-    frame_seq: bool = False,
-    stringified: bool = False,
-) -> tuple[dict[str, list], int]:
+    events: list[dict], log_file: str, stringified: bool = False,
+) -> dict[str, list]:
     """`envelope_records` in COLUMNAR form (r15 VERDICT #1): one list
     per envelope column, appended in a single pass — no per-record
-    dict allocation and no dict(base) copy per row image, and pandas
-    builds the mapInPandas batch from dict-of-lists (a C-speed column
-    zip) instead of re-inferring a list-of-dicts.  Content parity
-    with `envelope_records` is pinned by test; the record form stays
-    for the streaming tailer bridge (per-event callbacks).
+    dict allocation and no dict(base) copy per row image; the
+    mysql_binlog DataSource builds its Arrow batches from these lists.
+    Content parity with `envelope_records` (all but `seq`) is pinned
+    by test.
 
-    ``frame_seq=True`` switches `seq` from delivered-record numbering
-    to the codec's FRAME index (each event's position in the walk,
-    counting frames the pushdown skipped — the codec's seq-slot
+    `seq` is the codec's FRAME index (each event's position in the
+    walk, counting frames a pushdown skipped — the codec's seq-slot
     contract): the numbering a db/tbl/op pushdown can never change,
-    which is what makes Catalyst filter pushdown in the mysql_binlog
-    DataSource semantically transparent.  The returned next_seq still
-    counts delivered records.
+    which is what makes Catalyst filter pushdown in the DataSource
+    semantically transparent.  Filtering is the codec's job
+    (`decode_binlog(only_tables=..., only_ops=...)`); every event of
+    an envelope op passed in is emitted.
 
     ``stringified=True``: see `envelope_records` — images arrived
     pre-stringified from ``decode_binlog(..., stringify=True)``."""
@@ -309,23 +299,13 @@ def envelope_columns(
         c_op.append, c_sql.append, c_tid.append, c_et.append,
         c_ec.append,
     )
-    seq = seq_start
     for ev in events:
         op = ev["op"]
         if op not in _ENVELOPE_OPS:
             continue
-        is_rows = op.endswith("_rows")
-        if is_rows:
-            if (
-                only_tables is not None
-                and (ev["db"], ev["tbl"]) not in only_tables
-            ):
-                continue
-            if only_ops is not None and op not in only_ops:
-                continue
-        out_seq = ev["seq"] if frame_seq else seq
+        out_seq = ev["seq"]
         n_common = 1
-        if is_rows:
+        if op.endswith("_rows"):
             before = ev["before"] or []
             after = ev["after"] or []
             n = max(len(before), len(after))
@@ -372,15 +352,10 @@ def envelope_columns(
             c_tid.extend([ev.get("thread_id")] * n_common)
             c_et.extend([ev.get("exec_time")] * n_common)
             c_ec.extend([ev.get("error_code")] * n_common)
-        seq += 1
-    return cols, seq
+    return cols
 
 
-def _list_log_files(
-    path: str,
-    since_log: str | None = None,
-    spark: SparkSession | None = None,
-) -> list[str]:
+def _list_log_files(path: str, since_log: str | None = None) -> list[str]:
     """Driver-side rotation-ordered listing of a binlog directory,
     pruned to files >= `since_log`.  Rotated names are zero-padded
     (binlog.%06d — the real server convention), so lexicographic
@@ -390,29 +365,16 @@ def _list_log_files(
     rescan history — skipped files never even enter the Spark scan
     (they are excluded from the load list, not filtered after read).
 
-    With a `spark` session the listing goes through the Hadoop
-    FileSystem API, so `since=` works on any URI the binaryFile
-    reader can scan (hdfs://, s3a://, file:/ ...) — the same storage
-    contract as the since=None path (r15 ADVICE: os.listdir silently
-    restricted bounded replay to driver-local directories).  The
-    sparkless fallback lists locally.  Only names matching the
-    rotated-log pattern (`*.%06d`) are considered.
+    The listing uses local filesystem calls, like every read of the
+    DataSource: any directory `open()` reaches (local disk, NFS, a
+    FUSE-mounted bucket).  Only names matching the rotated-log pattern
+    (`*.%06d`) are considered.
     """
-    if spark is not None:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        pairs = sorted(
-            (st.getPath().getName(), st.getPath().toString())
-            for st in fs.listStatus(hpath)
-            if st.isFile()
-        )
-    else:
-        pairs = sorted(
-            (f, os.path.join(path, f))
-            for f in os.listdir(path)
-            if os.path.isfile(os.path.join(path, f))
-        )
+    pairs = sorted(
+        (f, os.path.join(path, f))
+        for f in os.listdir(path)
+        if os.path.isfile(os.path.join(path, f))
+    )
     kept = [(n, p) for n, p in pairs if _ROTATED_LOG_RE.search(n)]
     # Rollover guard (r19 review): past binlog.999999 a real server
     # writes binlog.1000000 — a SEVEN-digit suffix the six-digit
@@ -475,14 +437,12 @@ class LogDiscovery:
       the retained set tracks the UNCONSUMED backlog, not history.
 
     Storage scope: this class (and the streaming DataSource reader
-    that owns it) addresses the DRIVER-LOCAL filesystem — os.listdir
-    / os.path.isfile; the Python DataSource runs in a worker process
+    that owns it) addresses the filesystem through os.listdir /
+    os.path.isfile — the Python DataSource runs in a worker process
     with no JVM handle, so the Hadoop FS API is out of reach there.
-    Remote-URI directories (s3a://, hdfs://) are served by the BATCH
-    scan path, whose listing goes through the spark-aware
-    `_list_log_files`.  The O(new-files) probe design itself is
-    storage-agnostic — an object-store port swaps the two filesystem
-    calls for HEAD requests.
+    The O(new-files) probe design itself is storage-agnostic — an
+    object-store port swaps the two filesystem calls for HEAD
+    requests.
 
     A lowered numbering restart (RESET MASTER writing binlog.000001
     below a consumed binlog.000008) is invisible to probing — and was
@@ -560,9 +520,8 @@ class LogDiscovery:
 
 def normalize_envelope_columns(columns: list[str]) -> list[str]:
     """Validate a projection against the envelope and return it in
-    canonical envelope order (shared by both scan protocols — the
-    mysql_binlog DataSource's columns= option and
-    read_binlog_envelope's columns= parameter)."""
+    canonical envelope order (the mysql_binlog DataSource's columns=
+    option)."""
     unknown = sorted(set(columns) - set(_ENVELOPE_COLS))
     if unknown:
         raise ValueError(
@@ -598,139 +557,6 @@ def narrowed_envelope_schema(columns: list[str] | None) -> T.StructType:
     )
 
 
-def read_binlog_envelope(
-    spark: SparkSession,
-    path: str,
-    catalog: dict[tuple[str, str], list[str]] | None = None,
-    on_error: str = "raise",
-    only_tables: set[tuple[str, str]] | None = None,
-    since: tuple[str, int] | None = None,
-    only_ops: set[str] | None = None,
-    images: str = "both",
-    columns: list[str] | None = None,
-) -> DataFrame:
-    """Decode every binlog file under `path` into envelope records
-    (one record per row image pair; non-row events emit one record).
-
-    ``only_tables={(db, tbl), ...}`` pushes the table predicate INTO
-    the byte decode (filter-before-decode, SURVEY §4): row events for
-    other tables never pay image parsing — at 100 TB a per-table
-    consumer reads every frame header but decodes only its own rows.
-
-    ``only_ops={"write_rows", ...}`` pushes the DELTA-TYPE predicate
-    (R5) the same way (r16): an insert-only consumer skips update/
-    delete image parsing inside the codec.  Composes with
-    ``only_tables`` (both must pass).
-
-    ``since=(log_file, offset)`` is a bounded replay from a journaled
-    position: files BEFORE `log_file` in rotation order are pruned
-    DRIVER-SIDE and never enter the scan (the binlog analog of
-    partition pruning — a resume at 100 TB must not relist/redecode
-    history), and records of the boundary file before `offset` are
-    filtered out.  The boundary file is decoded from its start — a
-    mid-file seek would arrive without the table-map/checksum state
-    those earlier bytes establish (the tailer journals that state for
-    true mid-file resume; the batch scan re-derives it from the file
-    head).  Composes with ``only_tables``.
-
-    ``images``/``columns`` (r17): the same projection pruning the
-    mysql_binlog DataSource exposes as .option("columns", ...), on
-    THIS scan protocol — the binaryFile route is the object-store
-    path (s3a://, hdfs://), and a 100 TB consumer there needs the
-    narrow-aggregate-over-wide-table win just as much.  ``columns``
-    narrows the output schema (canonical envelope order); ``images``
-    defaults from it (un-projected image sides are width-walked in
-    the codec, never materialized).
-    """
-    if columns is not None:
-        if since is not None:
-            # the boundary cut filters on (log_file, offset) — they
-            # must survive the projection; callers drop them after
-            need = {"log_file", "offset"} - set(columns)
-            if need:
-                raise ValueError(
-                    "columns= with since= must include log_file and "
-                    f"offset (missing {sorted(need)}) — the boundary "
-                    "cut filters on them; drop them after the scan"
-                )
-        columns = normalize_envelope_columns(columns)
-        if images == "both":
-            images = images_for_columns(columns)
-    out_cols = tuple(columns) if columns is not None else _ENVELOPE_COLS
-    out_schema = narrowed_envelope_schema(columns)
-    if since is not None:
-        paths = _list_log_files(path, since[0], spark)
-        if not paths:
-            # nothing at or past the resume point: empty envelope
-            return spark.createDataFrame([], out_schema)
-        reader = spark.read.format("binaryFile").load(paths)
-    else:
-        # pathGlobFilter = the listing-time twin of _list_log_files'
-        # rotated-name regex: a real binlog directory always holds
-        # stray non-log files (binlog.index at minimum), and without
-        # the filter they sweep into the scan and fail the job on bad
-        # magic regardless of on_error (r19 review — the since= branch
-        # was already filtered; this one was not).
-        reader = (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", "*.[0-9][0-9][0-9][0-9][0-9][0-9]")
-            .load(path)
-        )
-    files = reader.select("path", "content")
-    # binaryFile packs many small logs into one 128 MB split, which
-    # would serialize the per-file Python decode onto one core; hash-
-    # distributing by path restores one-task-per-file parallelism
-    # (measured 4× on the sf0.1 fixtures).  Cost honesty (r19 review):
-    # this repartition shuffles the file CONTENT, so at a large
-    # backlog it writes the corpus through shuffle disk once — the
-    # price of keeping this route storage-agnostic (any URI
-    # binaryFile can read, no per-executor filesystem access).  The
-    # scale path for local/posix directories is the DataSource route
-    # (format("mysql_binlog")), whose greedy bin-packed partitions
-    # give one-task-per-file parallelism with NO shuffle.
-    files = files.repartition(
-        spark.sparkContext.defaultParallelism, "path"
-    )
-    # None → fixture defaults; an EXPLICIT empty dict means "no
-    # catalog at all" (names come from on-wire COLUMN_NAME TLVs or
-    # ordinals) — `or` would silently coerce {} to the fixtures.
-    cat = FIXTURE_CATALOG if catalog is None else catalog
-
-    def decode_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts: dict[str, list] = {c: [] for c in out_cols}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                log_file = str(fpath).rsplit("/", 1)[-1]
-                cols, _ = envelope_columns(
-                    decode_binlog(
-                        bytes(content), cat, on_error=on_error,
-                        only_tables=only_tables, only_ops=only_ops,
-                        images=images, stringify=True,
-                    ),
-                    log_file,
-                    stringified=True,
-                )
-                for c in out_cols:
-                    parts[c].extend(cols[c])
-            for c in ("xid", "thread_id", "exec_time", "error_code"):
-                # nullable ints must not coerce to float64 (the
-                # None+int pandas trap — 64-bit values would round)
-                if c in parts:
-                    parts[c] = pd.array(parts[c], dtype="Int64")
-            yield pd.DataFrame(parts, columns=list(out_cols))
-
-    env = files.mapInPandas(decode_part, out_schema)
-    if since is not None:
-        # boundary-file cut: later files pass whole, the resume file
-        # passes from the journaled offset (narrow filter, no shuffle)
-        from pyspark.sql import functions as F
-
-        env = env.filter(
-            (F.col("log_file") > since[0]) | (F.col("offset") >= since[1])
-        )
-    return env
-
-
 def typed_changes(
     env: DataFrame, db: str, tbl: str, columns: dict[str, str]
 ) -> DataFrame:
@@ -758,31 +584,6 @@ def typed_changes(
     return rows.select("log_file", "seq", "offset", "op", "row_idx", *typed)
 
 
-def typed_changes_scan(
-    spark: SparkSession,
-    path: str,
-    db: str,
-    tbl: str,
-    columns: dict[str, str],
-    catalog: dict[tuple[str, str], list[str]] | None = None,
-    on_error: str = "raise",
-) -> DataFrame:
-    """`typed_changes` with the table predicate pushed INTO the byte
-    decode (filter-before-decode, SURVEY §4): row events for every
-    other table skip image parsing inside the codec instead of being
-    decoded and discarded by the DataFrame filter.  The reference
-    decodes every used column of every row event and filters after
-    (mysql_binlog.clj:592-604) — at 100 TB a per-table typed view
-    should pay header-walk cost for foreign tables, not row decode.
-    Results are identical to `typed_changes(read_binlog_envelope(...),
-    db, tbl, columns)` except envelope `seq` numbering (delivery-order;
-    use (log_file, offset, row_idx) as the stable identity)."""
-    env = read_binlog_envelope(
-        spark, path, catalog, on_error=on_error, only_tables={(db, tbl)}
-    )
-    return typed_changes(env, db, tbl, columns)
-
-
 # ---------------------------------------------------------------------------
 # Deterministic fixture generation: events.parquet → real binlog bytes
 # ---------------------------------------------------------------------------
@@ -805,10 +606,10 @@ def fixture_val_before(event_id: int) -> str:
 
 # Rotation period for the byte-binlog fixtures: small enough that the
 # sf0.01 CORRECTNESS run spans several files — so the oracle gate
-# itself exercises multi-file parallel decode (one binaryFile task per
-# log) and the tailer's rotation-following over real ROTATE events,
-# not just the unit tests.  Envelope seq numbering depends on it:
-# global seq = file_index * (4 * ROTATE_EVERY) + seq_in_file.
+# itself exercises multi-file parallel decode (whole files per scan
+# task) and the tailer's rotation-following over real ROTATE events,
+# not just the unit tests.  The oracles' global event numbering depends
+# on it (queries/binlog.py _oracle_seq).
 ROTATE_EVERY = 2_500
 
 
@@ -1220,8 +1021,8 @@ def _write_rotated(out_dir: str, event_ids, emit, rotate_every: int = ROTATE_EVE
     """Drive a per-row `emit(writer, event_id)` callback across a
     ROTATE-chained file sequence (one file per `rotate_every` rows,
     each ending in a ROTATE event naming its successor — real binlog
-    layout, and the unit of decode parallelism: `binaryFile` runs one
-    task per file)."""
+    layout, and the unit of decode parallelism: a file never splits
+    across scan tasks unless it exceeds split_bytes)."""
     os.makedirs(out_dir, exist_ok=True)
     writer: BinlogWriter | None = None
     fname = None

@@ -33,6 +33,7 @@ import uuid
 
 from pyspark.sql import SparkSession
 
+from mysql_cdc_spark import SCRATCH_ROOT
 from mysql_cdc_spark.sources.binlog_codec import (
     TYPE_LONG,
     TYPE_NEWDECIMAL,
@@ -75,7 +76,7 @@ class _GrowingLog:
 def measure_latency(
     spark: SparkSession,
     turns: int = 20,
-    scratch_root: str = "/root/repo/.stream_tmp",
+    scratch_root: str = SCRATCH_ROOT,
     trigger_seconds: float = 0.05,
     timeout: float = 30.0,
 ) -> dict:

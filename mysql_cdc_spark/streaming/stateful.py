@@ -271,175 +271,3 @@ def txn_events_stateful(
         "append",
         GroupStateTimeout.EventTimeTimeout,
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas twin (Spark 4.x arbitrary-state API).
-# Same semantics as `txn_events_stateful`, better STATE LAYOUT: the
-# out-of-order holdback lives in a MapState keyed by offset — an
-# insert is one RocksDB put, not a rewrite of the whole serialized
-# buffer (applyInPandasWithState's single-value state forces array
-# round-trips: O(|buffer|) per batch vs O(new events) here).  Event-
-# time timers replace the manual setTimeoutTimestamp clamp dance: the
-# engine fires handleExpiredTimer when the WATERMARK passes the
-# registered timestamp.  transformWithState requires the RocksDB
-# state-store provider (the engine enforces it) — callers set
-# spark.sql.streaming.stateStore.providerClass accordingly.
-# ---------------------------------------------------------------------------
-
-
-class _TxnAssemblyProcessor:
-    """StatefulProcessor for per-log_file transaction assembly (the
-    class body avoids importing StatefulProcessor at module import —
-    the base class only documents hooks; duck-typing keeps this module
-    importable on any Spark)."""
-
-    def __init__(self, gc_gap_ms: int) -> None:
-        self._gap = gc_gap_ms
-
-    def init(self, handle) -> None:
-        self.handle = handle
-        self.cursor = handle.getValueState(
-            "cursor",
-            "next_off long, open_n long, open_first long, open_upd long",
-        )
-        self.buf = handle.getMapState("buf", "off long", "op string, xid long")
-
-    def _drain(self, key, cur):
-        next_off, open_n, open_first, open_upd = cur
-        out = []
-        while self.buf.containsKey((int(next_off),)):
-            op, xid = self.buf.getValue((int(next_off),))
-            self.buf.removeKey((int(next_off),))
-            if open_first is None:
-                open_first = next_off
-            open_n += 1
-            if op == "update_rows":
-                open_upd = 1
-            if op == "xid":
-                out.append((key[0], int(open_n), int(open_first),
-                            int(next_off), xid, int(open_upd)))
-                open_n, open_first, open_upd = 0, None, 0
-            next_off += 1
-        return (next_off, open_n, open_first, open_upd), out
-
-    def handleInputRows(self, key, rows, timerValues):
-        if self.cursor.exists():
-            cur = tuple(self.cursor.get())
-        else:
-            cur = (None, 0, None, 0)
-        max_ts_ms = None
-        for pdf in rows:
-            for off, op, xid in zip(pdf["offset"], pdf["op"], pdf["xid"]):
-                self.buf.updateValue(
-                    (int(off),),
-                    (str(op), None if pd.isna(xid) else int(xid)),
-                )
-            if len(pdf):
-                bm = pdf["ts"].max()
-                if not pd.isna(bm):
-                    ms = int(pd.Timestamp(bm).value // 1_000_000)
-                    max_ts_ms = ms if max_ts_ms is None else max(max_ts_ms, ms)
-        if cur[0] is None:
-            # anchor at the smallest buffered offset (same delivery
-            # contract as txn_events_stateful)
-            anchor = None
-            for (off,) in self.buf.keys():
-                anchor = off if anchor is None else min(anchor, off)
-            if anchor is None:
-                return
-            cur = (anchor, cur[1], cur[2], cur[3])
-        cur, out = self._drain(key, cur)
-        holding = cur[1] > 0 or self.buf.exists()
-        if holding:
-            self.cursor.update((
-                int(cur[0]), int(cur[1]),
-                None if cur[2] is None else int(cur[2]), int(cur[3]),
-            ))
-            wm = timerValues.getCurrentWatermarkInMs()
-            base = wm if max_ts_ms is None else max(max_ts_ms, wm)
-            # REPLACE the abandonment timer, never accumulate: a timer
-            # registered by an older batch would expire while the
-            # transaction is still open and handleExpiredTimer would
-            # clear live cursor+buf mid-transaction (wrong/partial
-            # commits downstream).  applyInPandasWithState's
-            # setTimeoutTimestamp replaces implicitly — deleting prior
-            # timers keeps the two twins' semantics identical (r15
-            # ADVICE, pinned in tests/test_streaming.py).
-            for t in list(self.handle.listTimers()):
-                self.handle.deleteTimer(t)
-            self.handle.registerTimer(max(base + self._gap, wm + 1))
-        else:
-            # commit boundary: nothing worth keeping, no timers behind
-            self.cursor.clear()
-            self.buf.clear()
-            for t in list(self.handle.listTimers()):
-                self.handle.deleteTimer(t)
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=["log_file", "n_events", "first_offset",
-                         "last_offset", "xid", "has_update"],
-            )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        # watermark GC of an abandoned partial transaction
-        self.cursor.clear()
-        self.buf.clear()
-        return iter([])
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def close(self) -> None:
-        pass
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas needs `google.protobuf` for its
-    Python driver-worker protocol (the engine raises
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE with an
-    ImportError otherwise).  This container ships pyspark WITHOUT
-    protobuf, so the modern-API twin below is implemented to the
-    public API and gated behind this probe — the environment blocker
-    is recorded, not hidden (same policy as the zstd/media codecs)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def txn_events_tws(
-    env_stream: DataFrame,
-    gc_gap_ms: int = TXN_GC_GAP_MS,
-    watermark_delay: str = "24 hours",
-) -> DataFrame:
-    """`txn_events_stateful` on the modern transformWithStateInPandas
-    API: MapState holdback (O(1) inserts), engine-managed event-time
-    timers for abandoned-transaction GC.  Output and semantics are
-    identical to the applyInPandasWithState form (pinned by the parity
-    test, which SKIPS where `tws_available()` is false); requires the
-    RocksDB state-store provider.
-
-    Same DENSE-offset input contract as `txn_events_stateful`: per
-    log_file, `offset` must be a dense unique integer sequence (use
-    the envelope's per-file ``seq``, not the raw byte offset, which
-    repeats across row_idx and would stall the cursor until the
-    watermark GC drops the transaction)."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf, which "
-            "this environment lacks — use txn_events_stateful "
-            "(identical semantics on applyInPandasWithState)"
-        )
-    rows = env_stream.withWatermark("ts", watermark_delay).select(
-        "log_file", "offset", "op", "xid", "ts"
-    )
-    return rows.groupBy("log_file").transformWithStateInPandas(
-        _TxnAssemblyProcessor(gc_gap_ms),
-        outputStructType=TXN_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime",
-    )

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from mysql_cdc_spark import SCRATCH_ROOT
 from mysql_cdc_spark.sources.binlog_codec import (
     MAGIC,
     TYPE_LONG,
@@ -236,16 +237,16 @@ def test_format_description_fields_decoded():
 
 
 def test_spark_source_multi_row_events(spark):
-    """Multi-row rows-events through the FULL Spark path (binaryFile →
-    mapInPandas): one envelope record per row image, sharing the
-    event's seq, ordered by row_idx."""
+    """Multi-row rows-events through the FULL Spark path
+    (format("mysql_binlog")): one envelope record per row image,
+    sharing the event's seq, ordered by row_idx."""
     import os
     import shutil
     import uuid
 
-    from mysql_cdc_spark.sources.binlog_source import read_binlog_envelope
+    from mysql_cdc_spark.sources.binlog_datasource import register_binlog_source
 
-    scratch = f"/root/repo/.stream_tmp/test/{uuid.uuid4().hex[:10]}"
+    scratch = f"{SCRATCH_ROOT}/test/{uuid.uuid4().hex[:10]}"
     os.makedirs(scratch, exist_ok=True)
     w = BinlogWriter()
     w.write_table_map(T3)
@@ -261,9 +262,14 @@ def test_spark_source_multi_row_events(spark):
     with open(f"{scratch}/binlog.000000", "wb") as fh:
         fh.write(w.getvalue())
     try:
-        env = read_binlog_envelope(spark, scratch).orderBy("seq", "row_idx").collect()
+        register_binlog_source(spark)
+        env = (
+            spark.read.format("mysql_binlog").load(scratch)
+            .orderBy("seq", "row_idx").collect()
+        )
         writes = [r for r in env if r["op"] == "write_rows"]
-        assert [(r["seq"], r["row_idx"]) for r in writes] == [(1, 0), (1, 1), (1, 2)]
+        seq = writes[0]["seq"]
+        assert [(r["seq"], r["row_idx"]) for r in writes] == [(seq, 0), (seq, 1), (seq, 2)]
         assert writes[1]["after"] == {"id": "2", "val": "2.0000", "word": None}
         updates = [r for r in env if r["op"] == "update_rows"]
         assert [(r["row_idx"]) for r in updates] == [0, 1]

@@ -1,11 +1,14 @@
 """The ``mysql_binlog`` Python DataSource (sources/binlog_datasource.py).
 
-Batch parity is pinned against ``read_binlog_envelope`` (the
-binaryFile + mapInPandas path) — same envelope rows, byte-exact.  The
-streaming reader's protocol is exercised both manually (driver walk:
-torn-tail holdback, mid-file state shipping, rotation, backpressure,
-restart prefix-replay) and end-to-end through Structured Streaming
-with a checkpointed restart (exactly-once across the kill).
+Batch parity is pinned against a driver-side reference
+(tests/envelope_reference.py: whole-file ``decode_binlog`` +
+``envelope_columns`` + the same filters in Python) — same envelope
+rows, byte-exact, ``seq`` included — both on hand-picked cases and as
+a hypothesis property over the option space.  The streaming reader's
+protocol is exercised both manually (driver walk: torn-tail holdback,
+mid-file state shipping, rotation, backpressure, restart
+prefix-replay) and end-to-end through Structured Streaming with a
+checkpointed restart (exactly-once across the kill).
 """
 
 from __future__ import annotations
@@ -17,7 +20,11 @@ import shutil
 import uuid
 
 import pytest
+from envelope_reference import canon_rows, reference_envelope
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
+from mysql_cdc_spark import SCRATCH_ROOT
 from mysql_cdc_spark.sources import binlog_source as bs
 from mysql_cdc_spark.sources.binlog_codec import (
     WRITE_ROWS_EVENT,
@@ -33,7 +40,7 @@ from mysql_cdc_spark.sources.binlog_datasource import (
     register_binlog_source,
 )
 
-TMP = "/root/repo/.stream_tmp/ds_tests"
+TMP = f"{SCRATCH_ROOT}/ds_tests"
 
 _T = TableDef("foo", "auto", [(TYPE_LONG, None), (TYPE_VARCHAR, 50)], table_id=7)
 _CAT_JSON = '{"foo.auto": ["id", "val"]}'
@@ -99,50 +106,41 @@ def _part_paths(parts) -> list[str]:
 
 class TestBatch:
     def test_envelope_parity(self, spark, fixture_dir):
-        # seq semantics differ by design: the DataSource emits the
-        # codec FRAME index (pushdown-invariant), the mapInPandas path
-        # emits delivered-record numbering — everything else matches
-        # byte-exactly
         ds = spark.read.format("mysql_binlog").load(fixture_dir)
-        ref = bs.read_binlog_envelope(spark, fixture_dir)
-        assert ds.schema == ref.schema
-        assert (
-            sorted(ds.drop("seq").collect())
-            == sorted(ref.drop("seq").collect())
+        assert ds.schema == bs.BINLOG_ENVELOPE_SCHEMA
+        assert canon_rows(ds.collect()) == canon_rows(
+            reference_envelope(fixture_dir)
         )
 
     def test_filter_pushdown_is_transparent(self, spark, fixture_dir):
         # the Catalyst-pushdown contract: df.filter(cond) must equal a
-        # client-side filter of the full scan EXACTLY — including seq,
-        # which only holds because seq is the codec frame index (a
-        # skipped frame still consumes its slot)
+        # client-side filter of the full decode EXACTLY — including
+        # seq, which only holds because seq is the codec frame index
+        # (a skipped frame still consumes its slot)
         cond = "db = 'foo' AND tbl = 'auto' AND op = 'write_rows'"
-        full = spark.read.format("mysql_binlog").load(fixture_dir).collect()
         pushed = (
             spark.read.format("mysql_binlog").load(fixture_dir)
             .filter(cond).collect()
         )
         client = [
-            r for r in full
-            if r.db == "foo" and r.tbl == "auto" and r.op == "write_rows"
+            r for r in reference_envelope(fixture_dir)
+            if r["db"] == "foo" and r["tbl"] == "auto" and r["op"] == "write_rows"
         ]
-        assert sorted(pushed) == sorted(client)
-        ref = bs.read_binlog_envelope(spark, fixture_dir).filter(cond)
-        assert (
-            sorted((r.log_file, r.offset, r.row_idx) for r in pushed)
-            == sorted((r.log_file, r.offset, r.row_idx) for r in ref.collect())
-        )
+        assert client and canon_rows(pushed) == canon_rows(client)
 
     def test_filter_keeps_non_row_semantics(self, spark, fixture_dir):
         # db='foo' alone (no tbl) cannot form only_tables pairs; and
         # even when pushed, Spark re-evaluates — xid/query rows with
         # db=NULL/other must not leak through
         ds = spark.read.format("mysql_binlog").load(fixture_dir)
-        ref = bs.read_binlog_envelope(spark, fixture_dir)
-        for cond in ("db = 'foo'", "op = 'xid'", "op IN ('xid','query')"):
-            assert (
-                sorted(ds.filter(cond).drop("seq").collect())
-                == sorted(ref.filter(cond).drop("seq").collect())
+        ref = reference_envelope(fixture_dir)
+        for cond, keep in (
+            ("db = 'foo'", lambda r: r["db"] == "foo"),
+            ("op = 'xid'", lambda r: r["op"] == "xid"),
+            ("op IN ('xid','query')", lambda r: r["op"] in ("xid", "query")),
+        ):
+            assert canon_rows(ds.filter(cond).collect()) == canon_rows(
+                [r for r in ref if keep(r)]
             ), cond
 
     def test_log_file_prune(self, spark, fixture_dir):
@@ -166,10 +164,8 @@ class TestBatch:
             .option("only_tables", "foo.auto")
             .load(fixture_dir)
         )
-        ref = bs.read_binlog_envelope(spark, fixture_dir, only_tables={("foo", "auto")})
-        assert (
-            sorted(ds.drop("seq").collect())
-            == sorted(ref.drop("seq").collect())
+        assert canon_rows(ds.collect()) == canon_rows(
+            reference_envelope(fixture_dir, only_tables={("foo", "auto")})
         )
 
     def test_since_parity(self, spark, fixture_dir):
@@ -185,10 +181,8 @@ class TestBatch:
             .option("since_offset", str(cut))
             .load(fixture_dir)
         )
-        ref = bs.read_binlog_envelope(spark, fixture_dir, since=(boundary, cut))
-        assert (
-            sorted(ds.drop("seq").collect())
-            == sorted(ref.drop("seq").collect())
+        assert canon_rows(ds.collect()) == canon_rows(
+            reference_envelope(fixture_dir, since=(boundary, cut))
         )
 
     def test_since_past_everything_is_empty(self, spark, fixture_dir):
@@ -241,7 +235,7 @@ class TestStreamProtocol:
         rows2 = _rows(b for p in parts for b in [*r.read(p)])
 
         expect = decode_binlog(full, _CAT)
-        cols, _ = bs.envelope_columns(expect, "binlog.000000")
+        cols = bs.envelope_columns(expect, "binlog.000000")
         assert len(rows1) + len(rows2) == len(cols["op"])
 
     def test_rotation_and_restart_prefix_replay(self, live_dir):
@@ -326,8 +320,8 @@ class TestStreamProtocol:
 
         e0 = decode_binlog(bytes(w.buf), _CAT)
         e1 = decode_binlog(bytes(w2.buf), _CAT)
-        c0, _ = bs.envelope_columns(e0, "binlog.000000")
-        c1, _ = bs.envelope_columns(e1, "binlog.000001")
+        c0 = bs.envelope_columns(e0, "binlog.000000")
+        c1 = bs.envelope_columns(e1, "binlog.000001")
         assert len(rows) == len(c0["op"]) + len(c1["op"])
 
     def test_empty_dir_then_first_file(self, live_dir):
@@ -403,7 +397,7 @@ class TestStreamProtocol:
             capped_batches += 1
         assert capped_batches > 3  # the cap genuinely sliced the file
         ref = decode_binlog(bytes(w.buf), _CAT)
-        cols, _ = bs.envelope_columns(ref, "binlog.000000", frame_seq=True)
+        cols = bs.envelope_columns(ref, "binlog.000000")
         expect = dict(zip(cols["offset"], cols["seq"]))
         got = {x["offset"]: x["seq"] for x in rows if x["row_idx"] == 0}
         assert got == expect  # file-global, collision-free
@@ -565,11 +559,7 @@ class TestStreamEndToEnd:
             )
             q.awaitTermination(120)
             got = [r.asDict() for r in spark.table(name).collect()]
-            ref = [
-                r.asDict()
-                for r in bs.read_binlog_envelope(spark, fixture_dir).collect()
-            ]
-            assert _key(got) == _key(ref)
+            assert _key(got) == _key(reference_envelope(fixture_dir))
         finally:
             shutil.rmtree(cp, ignore_errors=True)
 
@@ -628,13 +618,7 @@ class TestStreamEndToEnd:
             # exactly-once: sink contents == full batch decode, no
             # duplicates across the restart — checked against the
             # authoritative batch read
-            ref = [
-                r.asDict()
-                for r in bs.read_binlog_envelope(
-                    spark, live, catalog=_CAT
-                ).collect()
-            ]
-            assert _key(both) == _key(ref)
+            assert _key(both) == _key(reference_envelope(live, catalog=_CAT))
         finally:
             shutil.rmtree(cp, ignore_errors=True)
             shutil.rmtree(sink, ignore_errors=True)
@@ -910,8 +894,8 @@ class TestSplitBytes:
         rows = _rows(b for p in parts for b in [*r.read(p)])
         e0 = decode_binlog(bytes(w.buf), _CAT)
         e1 = decode_binlog(bytes(w2.buf), _CAT)
-        c0, _ = bs.envelope_columns(e0, "binlog.000000")
-        c1, _ = bs.envelope_columns(e1, "binlog.000001")
+        c0 = bs.envelope_columns(e0, "binlog.000000")
+        c1 = bs.envelope_columns(e1, "binlog.000001")
         assert len(rows) == len(c0["op"]) + len(c1["op"])
         got = sorted((x["log_file"], x["offset"], x["row_idx"]) for x in rows)
         exp = sorted(
@@ -1340,7 +1324,7 @@ class TestSinceGtid:
             assert a.end == b.start  # contiguous frame-aligned tiling
         rows = _rows(b for p in parts for b in [*r.read(p)])
         ref = decode_binlog(bytes(w.buf), _CAT)
-        cols, _ = bs.envelope_columns(ref, "binlog.000000", frame_seq=True)
+        cols = bs.envelope_columns(ref, "binlog.000000")
         assert len(rows) == len(cols["op"])
         # seq is file-global across slices — byte-identical to a
         # whole-file decode, not slice-local
@@ -1506,7 +1490,7 @@ class TestStreamPacking:
         expect = 0
         for k, w in enumerate(writers):
             evs = decode_binlog(bytes(w.buf), _CAT)
-            cols, _ = bs.envelope_columns(evs, f"binlog.{k:06d}")
+            cols = bs.envelope_columns(evs, f"binlog.{k:06d}")
             expect += len(cols["op"])
         assert len(rows) == expect
         # identity intact per file
@@ -1539,43 +1523,64 @@ class TestStreamPacking:
         assert parts[0].start == mid["pos"]  # mid-file slice standalone
 
 
-class TestBinaryFileRoutePruning:
-    """read_binlog_envelope (the binaryFile / object-store protocol)
-    carries the same images/columns pruning as the DataSource — the
-    two scan routes must agree narrowed exactly as they do full."""
+_ROW_OPS = ("write_rows", "update_rows", "delete_rows")
 
-    def test_columns_parity_with_datasource(self, spark, fixture_dir):
-        cols = ["log_file", "offset", "db", "tbl", "op", "row_idx"]
-        bf = bs.read_binlog_envelope(spark, fixture_dir, columns=cols)
-        assert bf.columns == cols
-        ds = (
-            spark.read.format("mysql_binlog")
-            .option("columns", ",".join(cols))
-            .load(fixture_dir)
-        )
-        assert sorted(bf.collect()) == sorted(ds.collect())
 
-    def test_single_image_side(self, spark, fixture_dir):
-        cols = ["log_file", "offset", "op", "row_idx", "after"]
-        bf = bs.read_binlog_envelope(spark, fixture_dir, columns=cols)
-        full = bs.read_binlog_envelope(spark, fixture_dir)
-        assert (
-            sorted(bf.collect())
-            == sorted(full.select(*cols).collect())
-        )
+class TestOptionSpace:
+    """The batch scan's option space as a space: for random
+    combinations of the row pushdowns, projection, resume point and
+    partitioning knobs, the DataSource result equals the driver-side
+    reference (whole-file decode, then the same filter and projection
+    in Python).  Fixed seed, so the example set is reproducible."""
 
-    def test_since_requires_cut_columns(self, spark, fixture_dir):
-        with pytest.raises(ValueError, match="must include log_file"):
-            bs.read_binlog_envelope(
-                spark, fixture_dir,
-                since=("binlog.000000", 4), columns=["op"],
+    @settings(
+        max_examples=20, deadline=None, derandomize=True,
+        suppress_health_check=[HealthCheck.too_slow],
+    )
+    @given(
+        only_tables=st.none() | st.sets(
+            st.sampled_from(["foo.auto", "bench.big", "lab.acct"]), min_size=1
+        ),
+        only_ops=st.none() | st.sets(st.sampled_from(_ROW_OPS), min_size=1),
+        columns=st.none() | st.lists(
+            st.sampled_from(bs._ENVELOPE_COLS), min_size=1, unique=True
+        ),
+        pack_bytes=st.sampled_from([None, "0", "120000"]),
+        split_bytes=st.sampled_from([None, "8000", "20000"]),
+        data=st.data(),
+    )
+    def test_scan_equals_reference(
+        self, spark, fixture_dir, only_tables, only_ops, columns,
+        pack_bytes, split_bytes, data,
+    ):
+        files = sorted(pathlib.Path(fixture_dir).glob("binlog.*"))
+        since = data.draw(st.none() | st.sampled_from(files).flatmap(
+            lambda f: st.tuples(
+                st.just(f.name), st.integers(4, f.stat().st_size)
             )
-        ok = bs.read_binlog_envelope(
-            spark, fixture_dir,
-            since=("binlog.000001", 4),
-            columns=["log_file", "offset", "op"],
+        ))
+        opts = {
+            "only_tables": only_tables and ",".join(sorted(only_tables)),
+            "only_ops": only_ops and ",".join(sorted(only_ops)),
+            "columns": columns and ",".join(columns),
+            "pack_bytes": pack_bytes,
+            "split_bytes": split_bytes,
+            "since_file": since and since[0],
+            "since_offset": since and str(since[1]),
+        }
+        r = spark.read.format("mysql_binlog")
+        for k, v in opts.items():
+            if v is not None:
+                r = r.option(k, v)
+        got = r.load(fixture_dir).collect()
+        want = reference_envelope(
+            fixture_dir,
+            only_tables=only_tables and {tuple(t.split(".")) for t in only_tables},
+            only_ops=only_ops,
+            since=since,
         )
-        assert ok.count() > 0
+        cols = bs.normalize_envelope_columns(columns) if columns else None
+        assert canon_rows(got) == canon_rows(want, cols)
 
 
 class TestReviewRegressions:
@@ -1708,7 +1713,7 @@ class TestStreamPackBudget:
         assert len(parts) < n_files, "small files did not pack"
         rows = _rows(b for p in parts for b in [*r.read(p)])
         want = sum(
-            len(bs.envelope_columns(decode_binlog(blob, _CAT), "f")[0]["op"])
+            len(bs.envelope_columns(decode_binlog(blob, _CAT), "f")["op"])
             for blob in blobs
         )
         assert len(rows) == want
@@ -1787,7 +1792,7 @@ class TestStreamPackBudget:
         assert triggers > 1, "budget did not split the catch-up"
         assert saw_packed, "capped catch-up never packed small files"
         want = sum(
-            len(bs.envelope_columns(decode_binlog(b, _CAT), "f")[0]["op"])
+            len(bs.envelope_columns(decode_binlog(b, _CAT), "f")["op"])
             for b in blobs
         )
         assert len(rows) == want, "capped drain lost or duplicated frames"
@@ -1985,7 +1990,7 @@ class TestPlanFastForward:
             if f < 5:
                 w.write_rotate(f"binlog.{f + 1:06d}")
             want += len(
-                bs.envelope_columns(decode_binlog(bytes(w.buf), _CAT), "f")[0]["op"]
+                bs.envelope_columns(decode_binlog(bytes(w.buf), _CAT), "f")["op"]
             )
         assert len(rows) == want
 

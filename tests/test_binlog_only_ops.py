@@ -190,32 +190,25 @@ def test_tailer_only_ops(tmp_path):
 
 
 def test_spark_envelope_only_ops_parity(spark, tmp_path):
-    """End-to-end through binaryFile + mapInPandas: the only_ops
-    envelope equals the full envelope filtered, on the stable
-    (log_file, offset, row_idx) identity."""
-    from mysql_cdc_spark.sources import binlog_source as bs
+    """End-to-end through format("mysql_binlog"): the only_ops option
+    equals the full decode filtered, seq included."""
+    import json
+
+    from envelope_reference import canon_rows, reference_envelope
+
+    from mysql_cdc_spark.sources.binlog_datasource import register_binlog_source
 
     out = tmp_path / "logs"
     out.mkdir()
     (out / "binlog.000001").write_bytes(_mixed_log())
     (out / "binlog.000002").write_bytes(_mixed_log(checksum="crc32"))
-    env_full = bs.read_binlog_envelope(spark, str(out), CAT)
-    env_push = bs.read_binlog_envelope(spark, str(out), CAT,
-                                       only_ops=INSERTS_ONLY)
-
-    def rows(df):
-        cols = [c for c in df.columns if c not in ("seq", "before", "after")]
-        out_rows = df.selectExpr(
-            *cols,
-            "array_join(transform(array_sort(map_keys(before)),"
-            " k -> concat(k, '=', coalesce(before[k], '<null>'))), ',') AS b",
-            "array_join(transform(array_sort(map_keys(after)),"
-            " k -> concat(k, '=', coalesce(after[k], '<null>'))), ',') AS a",
-        ).collect()
-        return sorted(tuple(r) for r in out_rows)
-
-    expect = rows(env_full.filter(
-        "op NOT IN ('update_rows','delete_rows')"
-    ))
-    got = rows(env_push)
-    assert got == expect and len(got) > 0
+    register_binlog_source(spark)
+    got = (
+        spark.read.format("mysql_binlog")
+        .option("catalog", json.dumps({f"{d}.{t}": c for (d, t), c in CAT.items()}))
+        .option("only_ops", "write_rows")
+        .load(str(out))
+        .collect()
+    )
+    want = reference_envelope(str(out), CAT, only_ops=INSERTS_ONLY)
+    assert want and canon_rows(got) == canon_rows(want)

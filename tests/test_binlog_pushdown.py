@@ -13,7 +13,10 @@ observed (the body is never read); CRC trailers ARE still verified.
 
 from __future__ import annotations
 
+import json
+
 import pytest
+from envelope_reference import canon_rows, reference_envelope
 
 from mysql_cdc_spark.sources.binlog_codec import (
     TYPE_LONG,
@@ -33,6 +36,7 @@ AUTO = TableDef("foo", "auto", COLS, table_id=1)
 BIG = TableDef("bench", "big", COLS, table_id=2)
 CAT = {("foo", "auto"): ["id", "val", "word"],
        ("bench", "big"): ["id", "val", "word"]}
+CAT_JSON = json.dumps({f"{d}.{t}": c for (d, t), c in CAT.items()})
 ROW_OPS = ("write_rows", "update_rows", "delete_rows")
 ONLY_AUTO = {("foo", "auto")}
 
@@ -192,41 +196,24 @@ def test_envelope_records_only_tables():
     assert [strip(r) for r in recs_f] == [strip(r) for r in kept]
 
 
+def _scan(spark, path, **options):
+    from mysql_cdc_spark.sources.binlog_datasource import register_binlog_source
+    from mysql_cdc_spark.sources.reader import read_binlog
+
+    register_binlog_source(spark)
+    return read_binlog(spark, str(path), catalog=CAT_JSON, **options)
+
+
 def test_spark_envelope_pushdown_parity(spark, tmp_path):
-    """End-to-end through binaryFile + mapInPandas: read_binlog_envelope
-    with only_tables equals the full envelope filtered, on the stable
-    (log_file, offset, row_idx) identity."""
-    import pathlib
-
-    from mysql_cdc_spark.sources import binlog_source as bs
-
+    """End-to-end through format("mysql_binlog"): the only_tables
+    option equals the full decode filtered, seq included."""
     out = tmp_path / "logs"
     out.mkdir()
     (out / "binlog.000001").write_bytes(_interleaved_log())
     (out / "binlog.000002").write_bytes(_interleaved_log(checksum="crc32"))
-    env_full = bs.read_binlog_envelope(spark, str(out), CAT)
-    env_push = bs.read_binlog_envelope(spark, str(out), CAT,
-                                       only_tables=ONLY_AUTO)
-
-    def rows(df):
-        # MAP columns don't support exceptAll; serialize each image to
-        # a sorted key=value string and compare as multisets
-        cols = [c for c in df.columns if c not in ("seq", "before", "after")]
-        out_rows = df.selectExpr(
-            *cols,
-            "array_join(transform(array_sort(map_keys(before)),"
-            " k -> concat(k, '=', coalesce(before[k], '<null>'))), ',') AS b",
-            "array_join(transform(array_sort(map_keys(after)),"
-            " k -> concat(k, '=', coalesce(after[k], '<null>'))), ',') AS a",
-        ).collect()
-        return sorted(tuple(r) for r in out_rows)
-
-    expect = rows(env_full.filter(
-        "op NOT IN ('write_rows','update_rows','delete_rows') "
-        "OR (db = 'foo' AND tbl = 'auto')"
-    ))
-    got = rows(env_push)
-    assert got == expect and len(got) > 0
+    got = _scan(spark, out, only_tables="foo.auto").collect()
+    want = reference_envelope(str(out), CAT, only_tables=ONLY_AUTO)
+    assert want and canon_rows(got) == canon_rows(want)
 
 
 # ---------------------------------------------------------------------------
@@ -253,69 +240,40 @@ def test_list_log_files_prunes_by_rotation_order(tmp_path):
 
 
 def test_since_replay_parity_and_pruning(spark, tmp_path):
-    """since=(log_file, offset): earlier files NEVER enter the scan
+    """since_file/since_offset: earlier files NEVER enter the scan
     (driver-side pruning), the boundary file cuts at the offset
     (mid-file positions included — byte offsets the SQL oracle cannot
-    express), and the result equals the full envelope filtered."""
-    import pathlib
-
+    express), and the result equals the full decode filtered."""
     from mysql_cdc_spark.sources import binlog_source as bs
+    from mysql_cdc_spark.sources.binlog_source import _list_log_files
 
     out = tmp_path / "logs"
     out.mkdir()
     for i in range(1, 4):
         (out / f"binlog.{i:06d}").write_bytes(_interleaved_log())
-    env_full = bs.read_binlog_envelope(spark, str(out), CAT)
-    rows_full = env_full.collect()
     # mid-file boundary: an offset strictly inside file 2
     offsets_f2 = sorted(
-        r["offset"] for r in rows_full if r["log_file"] == "binlog.000002"
+        r["offset"] for r in reference_envelope(str(out), CAT)
+        if r["log_file"] == "binlog.000002"
     )
     cut = offsets_f2[len(offsets_f2) // 2]
-    env_since = bs.read_binlog_envelope(
-        spark, str(out), CAT, since=("binlog.000002", cut)
-    )
-    got = sorted(
-        (r["log_file"], r["offset"], r["row_idx"], r["op"])
-        for r in env_since.collect()
-    )
-    want = sorted(
-        (r["log_file"], r["offset"], r["row_idx"], r["op"])
-        for r in rows_full
-        if r["log_file"] > "binlog.000002"
-        or (r["log_file"] == "binlog.000002" and r["offset"] >= cut)
-    )
-    assert got == want and len(got) > 0
+    since = dict(since_file="binlog.000002", since_offset=cut)
+    want = reference_envelope(str(out), CAT, since=("binlog.000002", cut))
+    assert {r["log_file"] for r in want} == {"binlog.000002", "binlog.000003"}
+    assert canon_rows(_scan(spark, out, **since).collect()) == canon_rows(want)
     # pruning is real: the driver-side load list itself excludes the
     # earlier file — it never enters the scan at all
-    from mysql_cdc_spark.sources.binlog_source import _list_log_files
-
     assert all(
         not p.endswith("binlog.000001")
         for p in _list_log_files(str(out), "binlog.000002")
     )
     # composes with pushdown
-    env_both = bs.read_binlog_envelope(
-        spark, str(out), CAT, since=("binlog.000002", cut),
-        only_tables=ONLY_AUTO,
-    )
-    got_both = sorted(
-        (r["log_file"], r["offset"], r["row_idx"], r["op"])
-        for r in env_both.collect()
-    )
-    want_both = [
-        t for t in want
-        if t[3] not in ROW_OPS
-        or next(
-            (r["db"], r["tbl"]) for r in rows_full
-            if (r["log_file"], r["offset"], r["row_idx"]) == t[:3]
-        ) in ONLY_AUTO
-    ]
-    assert got_both == sorted(want_both)
+    got_both = _scan(spark, out, only_tables="foo.auto", **since).collect()
+    assert canon_rows(got_both) == canon_rows(reference_envelope(
+        str(out), CAT, only_tables=ONLY_AUTO, since=("binlog.000002", cut)
+    ))
     # past-the-end resume: empty DataFrame with the envelope schema
-    env_empty = bs.read_binlog_envelope(
-        spark, str(out), CAT, since=("binlog.000099", 4)
-    )
+    env_empty = _scan(spark, out, since_file="binlog.000099", since_offset=4)
     assert env_empty.count() == 0
     assert env_empty.schema == bs.BINLOG_ENVELOPE_SCHEMA
 
@@ -334,47 +292,33 @@ def test_list_log_files_filters_to_rotation_pattern(tmp_path):
     assert got == [f"binlog.{i:06d}" for i in range(3)]
 
 
-def test_list_log_files_hadoop_fs_parity(spark, tmp_path):
-    """With a session the listing goes through the Hadoop FileSystem
-    API (any binaryFile-readable URI, r15 ADVICE); on a local dir it
-    must agree with the sparkless os.listdir fallback, and the URIs
-    it returns must be loadable by the binaryFile reader."""
-    from mysql_cdc_spark.sources.binlog_source import _list_log_files
-
-    for i in range(4):
-        (tmp_path / f"binlog.{i:06d}").write_bytes(b"payload")
-    (tmp_path / "binlog.index").write_bytes(b"x")
-    local = _list_log_files(str(tmp_path), "binlog.000001")
-    via_fs = _list_log_files(str(tmp_path), "binlog.000001", spark)
-    assert [p.rsplit("/", 1)[-1] for p in via_fs] == [
-        p.rsplit("/", 1)[-1] for p in local
-    ]
-    n = spark.read.format("binaryFile").load(via_fs).count()
-    assert n == 3
-
-
 def test_envelope_columns_parity_with_records():
-    """The columnar builder (r16 hot-loop form used by
-    read_binlog_envelope) must produce exactly envelope_records'
-    content, column for column — including under both pushdowns."""
+    """The columnar builder (the DataSource's hot-loop form) carries
+    exactly envelope_records' content, column for column — under both
+    codec pushdowns too — except `seq`, which is the codec frame index
+    rather than delivered-record numbering."""
     from mysql_cdc_spark.sources.binlog_source import (
-        _ENVELOPE_COLS, envelope_columns,
+        _ENVELOPE_COLS, _ENVELOPE_OPS, envelope_columns,
     )
 
     data = _interleaved_log()
-    events = decode_binlog(data, CAT)
     for kw in (
         {},
         {"only_tables": ONLY_AUTO},
         {"only_ops": {"write_rows"}},
         {"only_tables": ONLY_AUTO, "only_ops": {"write_rows"}},
     ):
-        recs, next_rec = envelope_records(events, "binlog.000001", 5, **kw)
-        cols, next_col = envelope_columns(events, "binlog.000001", 5, **kw)
-        assert next_col == next_rec
+        events = decode_binlog(data, CAT, **kw)
+        recs, _ = envelope_records(events, "binlog.000001")
+        cols = envelope_columns(events, "binlog.000001")
         assert set(cols) == set(_ENVELOPE_COLS)
         for c in _ENVELOPE_COLS:
-            assert cols[c] == [r[c] for r in recs], (kw, c)
+            if c != "seq":
+                assert cols[c] == [r[c] for r in recs], (kw, c)
+        assert cols["seq"] == sorted(cols["seq"])
+        assert set(cols["seq"]) == {
+            ev["seq"] for ev in events if ev["op"] in _ENVELOPE_OPS
+        }
 
 
 # ---------------------------------------------------------------------------
@@ -625,18 +569,15 @@ def test_archive_manifest_prunes_committed_batches(tmp_path):
 
 
 def test_batch_scan_ignores_stray_files(spark, tmp_path):
-    """since=None scan: a real binlog directory always holds stray
-    non-log files (binlog.index at minimum); they must never sweep
-    into the binaryFile scan — bad magic fails the job regardless of
-    on_error."""
-    from mysql_cdc_spark.sources import binlog_source as bs
-
+    """A real binlog directory always holds stray non-log files
+    (binlog.index at minimum); they must never sweep into the batch
+    scan — bad magic fails the job regardless of on_error."""
     out = tmp_path / "logs"
     out.mkdir()
     (out / "binlog.000001").write_bytes(_interleaved_log())
     (out / "binlog.index").write_text("binlog.000001\n")
     (out / "dump.sql").write_text("SELECT 1;\n")
-    env = bs.read_binlog_envelope(spark, str(out), CAT)
+    env = _scan(spark, out)
     seen = {r.log_file for r in env.select("log_file").distinct().collect()}
     assert seen == {"binlog.000001"}
 

@@ -139,14 +139,27 @@ def test_merge_join_snapshot_side_has_no_exchange(spark, rows_dt, tmp_path):
     )
 
 
-def test_gc_leaves_only_committed_version(spark, rows_dt, tmp_path):
+def test_gc_keeps_committed_and_previous_version(spark, rows_dt, tmp_path):
     import os
 
     st = _mk_state(tmp_path)
     for b in range(3):
         st.merge_batch(rows_dt.filter(F.col("offset") % 3 == b).limit(100), b)
-    vdirs = [e for e in os.listdir(st.root) if e.startswith("v")]
-    assert vdirs == ["v000002"]
+    vdirs = sorted(e for e in os.listdir(st.root) if e.startswith("v"))
+    assert vdirs == ["v000001", "v000002"]
+
+
+def test_reader_resolved_before_merge_survives_the_merge(spark, rows_dt, tmp_path):
+    """A current() frame resolved against v{N-1} still collects its
+    rows after a merge commits v{N}: the GC keeps the previous
+    version for readers that raced the pointer swap."""
+    st = _mk_state(tmp_path)
+    st.merge_batch(rows_dt.filter(F.col("offset") % 3 == 0).limit(100), 0)
+    frame = st.current(spark)
+    want = sorted(frame.collect())
+    st.merge_batch(rows_dt.filter(F.col("offset") % 3 == 1).limit(100), 1)
+    assert st.committed()["version"] == 1
+    assert sorted(frame.collect()) == want
 
 
 class TestIncrementalBuckets:

@@ -10,11 +10,12 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from mysql_cdc_spark import SCRATCH_ROOT
 from mysql_cdc_spark.operators import query
 from mysql_cdc_spark.sources.events_cdc import changes
 from mysql_cdc_spark.streaming import runtime as rt
 
-TMP = "/root/repo/.stream_tmp/test"
+TMP = f"{SCRATCH_ROOT}/test"
 
 
 @pytest.fixture()
@@ -308,7 +309,7 @@ def test_tailer_to_stream_incremental(spark):
 
     t3 = TableDef("foo", "auto", [(TYPE_LONG, None), (TYPE_NEWDECIMAL, (12, 4)), (TYPE_VARCHAR, 50)])
     cat = {("foo", "auto"): ["id", "val", "word"]}
-    scratch = f"/root/repo/.stream_tmp/test/{uuid.uuid4().hex[:10]}"
+    scratch = f"{SCRATCH_ROOT}/test/{uuid.uuid4().hex[:10]}"
     log_dir = f"{scratch}/logs"
     ev_dir = f"{scratch}/event_log"
     cp = f"{scratch}/cp"
@@ -370,7 +371,7 @@ def test_stateful_latest_state_across_batches(spark):
     from mysql_cdc_spark.streaming import runtime as rt
     from mysql_cdc_spark.streaming.stateful import latest_state_stateful
 
-    scratch = f"/root/repo/.stream_tmp/test/{uuid.uuid4().hex[:10]}"
+    scratch = f"{SCRATCH_ROOT}/test/{uuid.uuid4().hex[:10]}"
     log_dir = f"{scratch}/log"
 
     from datetime import datetime
@@ -420,7 +421,7 @@ def test_dedup_within_watermark_bounded_state(spark):
 
     from mysql_cdc_spark.model import ENVELOPE_SCHEMA
 
-    scratch = f"/root/repo/.stream_tmp/test/{uuid.uuid4().hex[:10]}"
+    scratch = f"{SCRATCH_ROOT}/test/{uuid.uuid4().hex[:10]}"
     log = f"{scratch}/log"
     try:
         base = datetime(2024, 1, 1)
@@ -510,7 +511,7 @@ def test_txn_assembly_watermark_gc_and_reorder(spark):
     from mysql_cdc_spark.streaming import runtime as rt
     from mysql_cdc_spark.streaming.stateful import txn_events_stateful
 
-    scratch = f"/root/repo/.stream_tmp/test/{uuid.uuid4().hex[:10]}"
+    scratch = f"{SCRATCH_ROOT}/test/{uuid.uuid4().hex[:10]}"
     log_dir = f"{scratch}/log"
     t0 = datetime(2024, 1, 1)
 
@@ -571,231 +572,6 @@ def test_txn_assembly_watermark_gc_and_reorder(spark):
         assert state_rows[-1] == 0, f"abandoned state not GC'd: {state_rows}"
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-
-
-def test_txn_assembly_transformwithstate_twin(spark):
-    """The transformWithStateInPandas form of the transaction
-    assembler (MapState holdback, engine-managed event-time timers)
-    must reproduce the applyInPandasWithState form's output on the
-    same two-batch log — including the abandoned-partial GC and the
-    cross-batch gap fill — and terminate its availableNow drain.
-
-    SKIPS where the environment cannot run transformWithState at all:
-    its Python driver worker imports google.protobuf, which this
-    container's pyspark install does not ship (measured:
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE / ImportError) —
-    the guard is an environment capability probe, not a soft-pass."""
-    import shutil
-    import uuid
-    from datetime import datetime, timedelta
-
-    from mysql_cdc_spark.model import ENVELOPE_SCHEMA
-    from mysql_cdc_spark.streaming import runtime as rt
-    from mysql_cdc_spark.streaming.stateful import (
-        tws_available,
-        txn_events_stateful,
-        txn_events_tws,
-    )
-
-    if not tws_available():
-        pytest.skip(
-            "transformWithStateInPandas unavailable: pyspark's TWS "
-            "python worker needs google.protobuf, absent here"
-        )
-
-    scratch = f"/root/repo/.stream_tmp/test/{uuid.uuid4().hex[:10]}"
-    log_dir = f"{scratch}/log"
-    t0 = datetime(2024, 1, 1)
-
-    def ev(log, offset, op, ts, xid=None):
-        return (offset, log, ts, 1, xid, "foo", "auto", op,
-                None, None, None, None, None)
-
-    rows1 = [
-        ev("A", 0, "query", t0), ev("A", 1, "table_map", t0),
-        ev("A", 2, "write_rows", t0),
-        ev("C", 0, "query", t0), ev("C", 2, "update_rows", t0),
-        ev("C", 3, "xid", t0, xid=77),
-    ]
-    rows2 = [
-        ev("C", 1, "table_map", t0 + timedelta(seconds=1)),
-        ev("B", 0, "query", t0 + timedelta(days=30)),
-        ev("B", 1, "write_rows", t0 + timedelta(days=30)),
-        ev("B", 2, "xid", t0 + timedelta(days=30), xid=88),
-    ]
-    key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = ("org.apache.spark.sql.execution.streaming.state."
-             "RocksDBStateStoreProvider")
-    try:
-        default = spark.conf.get(key)
-    except Exception:
-        default = None
-    try:
-        for rows in (rows1, rows2):
-            spark.createDataFrame(rows, ENVELOPE_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(log_dir)
-        spark.conf.set(key, rocks)  # transformWithState requires RocksDB
-
-        def drain(factory, cp_tag):
-            stream = rt.open_stream(spark, log_dir, max_files_per_trigger=1)
-            asm = factory(stream, gc_gap_ms=60_000, watermark_delay="0 seconds")
-            sink = f"tws_{uuid.uuid4().hex[:8]}"
-            q = (
-                asm.writeStream.format("memory").queryName(sink)
-                .outputMode("append")
-                .option("checkpointLocation", f"{scratch}/cp_{cp_tag}")
-                .trigger(availableNow=True).start()
-            )
-            assert q.awaitTermination(240), "drain did not terminate"
-            return sorted(
-                map(tuple, spark.sql(f"SELECT * FROM {sink}").collect())
-            )
-
-        got_tws = drain(txn_events_tws, "tws")
-        got_apw = drain(txn_events_stateful, "apw")
-        assert got_tws == got_apw, (got_tws, got_apw)
-        by_log = {r[0]: r for r in got_tws}
-        assert by_log["C"][1] == 4 and by_log["C"][4] == 77
-        assert by_log["B"][4] == 88
-        assert "A" not in by_log            # abandoned partial GC'd
-    finally:
-        if default is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, default)
-        shutil.rmtree(scratch, ignore_errors=True)
-
-
-# ---------------------------------------------------------------------------
-# r16 (r15 ADVICE, medium): the transformWithState twin must REPLACE
-# its abandonment timer each batch, not accumulate timers — a stale
-# timer from an older batch expiring while the transaction is still
-# open would fire handleExpiredTimer and clear live cursor+buf
-# mid-transaction (wrong/partial commits).  transformWithState itself
-# is env-blocked (protobuf), so the processor is driven directly with
-# duck-typed fakes of the public ValueState/MapState/handle API —
-# the timer discipline is pure processor logic, not engine logic.
-# ---------------------------------------------------------------------------
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeMapState:
-    def __init__(self):
-        self._m = {}
-
-    def containsKey(self, k):
-        return k in self._m
-
-    def getValue(self, k):
-        return self._m[k]
-
-    def removeKey(self, k):
-        self._m.pop(k)
-
-    def updateValue(self, k, v):
-        self._m[k] = v
-
-    def keys(self):
-        return iter(list(self._m.keys()))
-
-    def exists(self):
-        return bool(self._m)
-
-    def clear(self):
-        self._m.clear()
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.timers = []
-
-    def getValueState(self, name, schema):
-        return _FakeValueState()
-
-    def getMapState(self, name, kschema, vschema):
-        return _FakeMapState()
-
-    def registerTimer(self, ts):
-        self.timers.append(ts)
-
-    def deleteTimer(self, ts):
-        self.timers.remove(ts)
-
-    def listTimers(self):
-        return list(self.timers)
-
-
-class _FakeTimerValues:
-    def __init__(self, wm):
-        self._wm = wm
-
-    def getCurrentWatermarkInMs(self):
-        return self._wm
-
-
-def test_tws_processor_replaces_timer_while_holding():
-    """While a transaction stays open across batches, exactly ONE
-    timer may be live, and it must track the NEWEST event time —
-    matching applyInPandasWithState's replace-on-set semantics."""
-    import pandas as pd
-
-    from mysql_cdc_spark.streaming.stateful import _TxnAssemblyProcessor
-
-    gap = 60_000
-    proc = _TxnAssemblyProcessor(gap)
-    handle = _FakeHandle()
-    proc.init(handle)
-    key = ("binlog.000001",)
-
-    def batch(offsets, ops, xids, ts_ms, wm_ms):
-        pdf = pd.DataFrame(
-            {
-                "offset": offsets,
-                "op": ops,
-                "xid": xids,
-                "ts": [pd.Timestamp(t, unit="ms") for t in ts_ms],
-            }
-        )
-        return list(proc.handleInputRows(key, iter([pdf]), _FakeTimerValues(wm_ms)))
-
-    t1, t2, t3 = 1_000_000, 2_000_000, 3_000_000
-    out = batch([0], ["write_rows"], [float("nan")], [t1], wm_ms=0)
-    assert out == [] and handle.timers == [t1 + gap]
-
-    # still holding in batch 2: the older timer must be DELETED, not
-    # joined by a second one (the stale firing is the r15 ADVICE bug)
-    out = batch([1], ["write_rows"], [float("nan")], [t2], wm_ms=t1)
-    assert out == []
-    assert handle.timers == [t2 + gap], handle.timers
-
-    # xid closes the transaction: emit once, state gone, timers gone
-    out = batch([2], ["xid"], [7.0], [t3], wm_ms=t2)
-    assert len(out) == 1
-    row = out[0].iloc[0]
-    assert (
-        row["n_events"] == 3
-        and row["first_offset"] == 0
-        and row["last_offset"] == 2
-        and row["xid"] == 7
-    )
-    assert handle.timers == [] and not proc.cursor.exists() and not proc.buf.exists()
 
 
 def test_txn_assembler_open_state_bound(spark):

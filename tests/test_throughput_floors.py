@@ -171,7 +171,7 @@ def test_envelope_decode_throughput_floor(spark):
 
 
 def test_multicore_decode_per_core_floor():
-    """r14 VERDICT #3: the 100 TB decode claim rests on mapInPandas
+    """r14 VERDICT #3: the 100 TB decode claim rests on decode
     parallelism across binlog FILES.  Measured r15 on the x10 log
     (400 files): 1 core 57k rows/s, 8 cores 368k (6.4×, 80% per-core
     retention), 32 cores 995k (17.4×, 54%) — the 32-way drop is
@@ -182,11 +182,13 @@ def test_multicore_decode_per_core_floor():
     throughput; decode and envelope_records split the per-task cost
     ~50/50 at ~188k rows/s each).
 
-    This floor pins the PARALLEL path at 8 cores on the sf0.1 log (40
-    files, measured 231k rows/s total / 29k per core in a fresh JVM):
-    a regression that serializes the per-file decode onto one core
-    (the failure the repartition-by-path in read_binlog_envelope
-    exists to prevent) lands at ≤90k total and fails both floors."""
+    This floor pins the PARALLEL path (the mysql_binlog DataSource
+    scan, tools/decode_scaling.py) at 8 cores on the sf0.1 log (40
+    files, measured 231k rows/s total / 29k per core in a fresh JVM
+    on the former mapInPandas path): a regression that serializes the
+    per-file decode onto one core (the failure the DataSource's
+    bin-pack fan-out floor exists to prevent) lands at ≤90k total and
+    fails both floors."""
     import json
     import pathlib
     import subprocess
@@ -202,7 +204,8 @@ def test_multicore_decode_per_core_floor():
         get_spark("floor-fixture")  # session only needed by generator callers
         bs.generate_binlog_from_events("/root/testdata/sf0.1", str(fixture))
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/decode_scaling.py",
+        [sys.executable,
+         str(pathlib.Path(__file__).resolve().parent.parent / "tools" / "decode_scaling.py"),
          "--worker", "8", str(fixture)],
         capture_output=True, text=True, timeout=600,
     )

@@ -33,8 +33,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-ORGANIC_X10 = "/root/repo/.stream_tmp/stress/organic_x10"
-ORGANIC_X100 = "/root/repo/.stream_tmp/stress/organic_x100"
+from mysql_cdc_spark import SCRATCH_ROOT  # noqa: E402
+
+ORGANIC_X10 = f"{SCRATCH_ROOT}/stress/organic_x10"
+ORGANIC_X100 = f"{SCRATCH_ROOT}/stress/organic_x100"
 
 
 def topk_sets(df) -> dict[int, set[int]]:

@@ -1,8 +1,8 @@
 """Multi-core decode scaling (r14 VERDICT #3).
 
 decode_rows_per_sec in bench.py is a single-pipeline number; the
-100 TB claim rests on mapInPandas parallelism across binlog FILES
-(read_binlog_envelope hash-distributes whole files to tasks).  This
+100 TB claim rests on decode parallelism across binlog FILES (the
+mysql_binlog DataSource packs whole files into scan tasks).  This
 tool measures end-to-end envelope decode rows/s on the x10 multi-file
 byte log (400 files, ~200 MB) at 1 / 8 / 32 cores, each in its OWN
 subprocess+JVM (core count is a session-construction property), and
@@ -25,11 +25,13 @@ import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
-X10_EVENTS = "/root/repo/.stream_tmp/stress/organic_x10"
+from mysql_cdc_spark.queries._shared import _STREAM_TMP  # noqa: E402
+
+X10_EVENTS = f"{_STREAM_TMP}/stress/organic_x10"
 
 
 def ensure_fixture() -> str:
-    from mysql_cdc_spark.queries._shared import _FIXTURE_VERSION, _STREAM_TMP
+    from mysql_cdc_spark.queries._shared import _FIXTURE_VERSION
     from mysql_cdc_spark.sources import binlog_source as bs
 
     out_dir = pathlib.Path(_STREAM_TMP) / f"binlog_organic_x10_v{_FIXTURE_VERSION}"
@@ -43,18 +45,19 @@ def worker(cores: int, fixture: str) -> None:
 
     os.environ["SPARK_GRAFT_CPUS"] = str(cores)
     from mysql_cdc_spark.session import get_spark
-    from mysql_cdc_spark.sources import binlog_source as bs
+    from mysql_cdc_spark.sources.binlog_datasource import register_binlog_source
 
     spark = get_spark(f"decode-scaling-{cores}")
     spark.sparkContext.setLogLevel("ERROR")
-    env = bs.read_binlog_envelope(spark, fixture)
+    register_binlog_source(spark)
+    env = spark.read.format("mysql_binlog").load(fixture)
     n_rows = env.count()  # warm (also the row count)
     best = float("inf")
     for _ in range(2):
         t0 = time.perf_counter()
-        bs.read_binlog_envelope(spark, fixture).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        spark.read.format("mysql_binlog").load(fixture).write.format(
+            "noop"
+        ).mode("overwrite").save()
         best = min(best, time.perf_counter() - t0)
     print(json.dumps({
         "cores": cores, "rows": n_rows, "wall_sec": round(best, 3),

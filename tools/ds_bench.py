@@ -1,19 +1,14 @@
-"""mysql_binlog DataSource vs binaryFile+mapInPandas: same codec, two
-scan protocols — measures what the Python Data Source path costs or
-saves at scale.
+"""mysql_binlog DataSource scan variants: what pushdown, pruning and
+the streaming protocol cost or save at scale.
 
 Variants on one byte fixture (default the sf0.1 envelope fixture; pass
 `.stream_tmp/binlog_organic_x10_v{ver}` for the x10 line):
 
-- mapinpandas_full:   read_binlog_envelope count (the r15 baseline path)
 - datasource_full:    format("mysql_binlog") count — arrow RecordBatch
-                      ingest, one InputPartition per file
-- mapinpandas_push:   read_binlog_envelope(only_tables=foo.auto) row-
-                      event count (keyword pushdown)
-- datasource_push:    same predicate as a PLAIN Catalyst filter on the
-                      DataSource scan — pushFilters must route it into
-                      the codec, so this should match mapinpandas_push,
-                      not mapinpandas_full + filter
+                      ingest, whole files per InputPartition
+- datasource_push:    foo.auto row-event count as a PLAIN Catalyst
+                      filter on the DataSource scan — pushFilters must
+                      route it into the codec
 - datasource_stream:  readStream availableNow catch-up drain to a
                       foreachBatch row counter — the whole backlog
                       through the streaming protocol (driver state walk
@@ -41,7 +36,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from mysql_cdc_spark.session import get_spark
-    from mysql_cdc_spark.sources import binlog_source as bs
     from mysql_cdc_spark.sources.binlog_datasource import (
         register_binlog_source,
     )
@@ -79,23 +73,10 @@ def main() -> None:
     # warmup: JVM/arrow/python-worker spin-up must not land on the
     # first variant measured
     spark.read.format("mysql_binlog").load(fixture).limit(1).count()
-    bs.read_binlog_envelope(spark, fixture).limit(1).count()
 
-    timed(
-        "mapinpandas_full",
-        lambda: bs.read_binlog_envelope(spark, fixture).count(),
-    )
     timed(
         "datasource_full",
         lambda: spark.read.format("mysql_binlog").load(fixture).count(),
-    )
-    timed(
-        "mapinpandas_push",
-        lambda: bs.read_binlog_envelope(
-            spark, fixture, only_tables={("foo", "auto")}
-        )
-        .filter(F.col("op").isin(*row_ops))
-        .count(),
     )
     timed(
         "datasource_push",
@@ -309,9 +290,6 @@ def main() -> None:
 
     out["discovery"] = _discovery_bench()
 
-    out["ds_vs_mapinpandas_full"] = round(
-        out["datasource_full"]["sec"] / out["mapinpandas_full"]["sec"], 3
-    )
     out["ds_push_speedup"] = round(
         out["datasource_full"]["sec"] / out["datasource_push"]["sec"], 3
     )

@@ -36,7 +36,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-SCRATCH = Path("/root/repo/.stream_tmp/rebucket_scale")
+from mysql_cdc_spark import SCRATCH_ROOT  # noqa: E402
+
+SCRATCH = Path(SCRATCH_ROOT) / "rebucket_scale"
 
 
 def main() -> None:

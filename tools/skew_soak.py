@@ -42,8 +42,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from mysql_cdc_spark import SCRATCH_ROOT  # noqa: E402
+
 BASE = "/root/testdata/sf0.1"
-SCRATCH = "/root/repo/.stream_tmp/stress"
+SCRATCH = f"{SCRATCH_ROOT}/stress"
 
 NAMES = [
     "cdc_latest_state", "cdc_hot_keys", "ts_asof_join", "ts_range_join",

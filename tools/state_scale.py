@@ -35,7 +35,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-SCRATCH = Path("/root/repo/.stream_tmp/state_scale")
+from mysql_cdc_spark import SCRATCH_ROOT  # noqa: E402
+
+SCRATCH = Path(SCRATCH_ROOT) / "state_scale"
 N_BATCHES = 4
 
 _PROVIDERS = {
